@@ -576,6 +576,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        # the core count that produced these numbers; detail-only, the
+        # final line's tail budget is fixed
+        "cpus": spark.sparkContext.defaultParallelism,
         "timing": (
             f"min_of_{runs}_plus_one_when_prior_gt_3s"
             "_plus_stall_rescue_at_1p5x_prior"

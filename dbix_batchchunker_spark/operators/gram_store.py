@@ -64,11 +64,14 @@ import os
 import tempfile
 import uuid
 import warnings
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_fs
 from .registry import query, t
+from .store_fs import StoreLease, StoreMaintenanceLockError
 from .text import (
     _SSD_N,
     _apply_span_removal,
@@ -95,89 +98,12 @@ COMPACT_PARTITION = -1
 #: same threshold so the loop can schedule the compact that clears it.
 TOMBSTONE_BROADCAST_MAX_BYTES = 32 << 20
 
-#: Hadoop path-capability string a FileSystem declares when its
-#: create-if-absent is a CONDITIONAL WRITE (s3a on Hadoop 3.4.1+ with
-#: conditional creates enabled: PUT If-None-Match — atomic even on the
-#: object store where plain createNewFile is check-then-create).
-CONDITIONAL_CREATE_CAPABILITY = "fs.capability.conditional.create"
-
-
-def _atomic_create_if_absent(fs, jp) -> bool:
-    """Create-if-absent through the STRONGEST primitive the FileSystem
-    declares — the lease-file acquire shared by the gram store and the
-    persisted embedding store (round-16 verdict, What's-missing #3: the
-    object-store lease was best-effort with an external-lock caveat; a
-    conditional-PUT path where the store supports it upgrades it to
-    closed). Connectors declaring ``fs.capability.conditional.create``
-    get the builder create with ``overwrite(False)`` — on Hadoop 3.4.1+
-    s3a that is a conditional PUT, so of two racing maintainers EXACTLY
-    ONE wins even over eventually-visible listings (the loser surfaces
-    as FileAlreadyExists/RemoteFileChanged at build or close). Everything
-    else falls back to ``createNewFile`` with the documented per-scheme
-    guarantee (atomic hdfs://, single-host file://, best-effort object
-    stores WITHOUT the capability — the external-lock guidance stands
-    for those). Returns True when this caller created the file, False
-    when a rival already holds it; any OTHER IO failure re-raises — a
-    network error must not masquerade as 'lease held'. The loser is
-    classified by walking the Java exception AND its causes (s3a wraps
-    FileAlreadyExists/RemoteFileChanged inside translated wrappers); a
-    transient failure AFTER the PUT materialized can still leave an
-    orphan lease the caller must ``break_lease()`` — the safe direction
-    (the acquire errors rather than reporting 'held')."""
-    try:
-        conditional = bool(
-            fs.hasPathCapability(jp, CONDITIONAL_CREATE_CAPABILITY)
-        )
-    except Exception:  # noqa: BLE001 — FS predating the probe API
-        conditional = False
-    if not conditional:
-        return bool(fs.createNewFile(jp))
-    try:
-        out = fs.createFile(jp).overwrite(False).build()
-        try:
-            out.write(bytearray(b"lease"))
-        finally:
-            out.close()
-        return True
-    except Exception as e:  # noqa: BLE001 — split on the Java class below
-        je = getattr(e, "java_exception", None)
-        names = []
-        seen = 0
-        while je is not None and seen < 8:  # bounded cause walk
-            names.append(je.getClass().getName())
-            je = je.getCause()
-            seen += 1
-        if any(
-            "FileAlreadyExistsException" in name
-            or "PathExistsException" in name
-            or "RemoteFileChangedException" in name
-            for name in names
-        ):
-            return False  # the rival's conditional create won
-        raise
-
-
-class StoreMaintenanceLockError(RuntimeError):
-    """A writer or a compact refused to run because the other side of the
-    maintenance handshake is live: writers refuse while the lease is held
-    (a ``compact()`` is in flight — or crashed without releasing), and
-    compact refuses while any writer's in-progress MARKER is live. Raised
-    LOUDLY instead of corrupting silently: an ingest or purge that lands
-    between compact's live-postings read and its partition drops is
-    folded-then-dropped (data loss) or cleared-unfolded (lost tombstone).
-    A lease or marker left by a CRASHED holder is broken explicitly with
-    ``break_lease()`` (or ``compact(force=True)``) once the operator
-    confirms no holder is live — the same crash-repair flow as re-running
-    the compact itself."""
-
-
 class GramPostingsStore:
     """Lifecycle owner of one postings table. ``name`` is the catalog
     table name (in-memory catalog: per-session; ``register()`` re-attaches
     an existing on-disk store in a fresh session), ``path`` the external
-    location — any Hadoop-FS scheme (file://, hdfs://, s3a://), all
-    maintenance IO goes through the path's own FileSystem (the IVF-store
-    rule, similarity.py)."""
+    location — any Hadoop-FS scheme (file://, hdfs://, s3a://); all
+    maintenance IO goes through :mod:`store_fs`."""
 
     def __init__(
         self,
@@ -195,9 +121,11 @@ class GramPostingsStore:
         self.lease_path = path + "__maintenance_lease"
         self.writers_path = path + "__writers"
         self.hwm_path = path + "__bid_hwm"
-        # reentrancy marker: compact() holds the lease while calling
-        # _insert for its own fold — only FOREIGN writers must refuse
-        self._lease_held = False
+        #: the maintenance lease ``compact()`` holds; per-scheme guarantee
+        #: in :class:`store_fs.StoreLease`. ``_lease.held`` doubles as the
+        #: reentrancy marker: compact's own fold insert passes the writer
+        #: check, only FOREIGN writers refuse.
+        self._lease = StoreLease(spark, self.lease_path, f"gram store {name}")
 
     # -- creation / registration ------------------------------------------
 
@@ -231,7 +159,7 @@ class GramPostingsStore:
         # TABLE does not mkdir; nothing was ever inserted) —
         # recoverPartitions throws FileNotFoundException on it. Found by
         # the randomized lifecycle fuzz (re-register before first ingest).
-        fs, jp = self._fs(self.path)
+        fs, jp = store_fs.fs_for(self.spark, self.path)
         if not fs.exists(jp):
             fs.mkdirs(jp)
         self.spark.catalog.recoverPartitions(self.name)
@@ -255,7 +183,7 @@ class GramPostingsStore:
         postings out and over-counted n_postings_total, 6 reported vs 4
         stored). Deduping HERE would put a tombstone-side shuffle into
         every per-batch read plan, so it stays at the consumer."""
-        fs, jp = self._fs(self.tombstone_path)
+        fs, jp = store_fs.fs_for(self.spark, self.tombstone_path)
         if not fs.exists(jp):
             return None
         return self.spark.read.parquet(self.tombstone_path).select("doc_id")
@@ -263,7 +191,7 @@ class GramPostingsStore:
     def _tombstone_bytes(self) -> int:
         """On-disk bytes of the tombstone backlog — FS metadata only (no
         Spark job), so the per-read broadcast/shuffle decision is free."""
-        fs, jp = self._fs(self.tombstone_path)
+        fs, jp = store_fs.fs_for(self.spark, self.tombstone_path)
         if not fs.exists(jp):
             return 0
         return int(fs.getContentSummary(jp).getLength())
@@ -292,7 +220,8 @@ class GramPostingsStore:
         examples/multi_drop_onboarding.py; pinned in the shared-sink
         test). The reference's posture exactly: cursor ids are monotone,
         never recycled (BatchChunker.pm). One SHOW PARTITIONS + one FS
-        metadata read — bounded driver materialization."""
+        metadata read (the mark is absent only before the first compact)
+        — bounded driver materialization."""
         # one row per partition — bounded driver materialization
         parts = [
             int(r[0].split("=", 1)[1])
@@ -301,58 +230,7 @@ class GramPostingsStore:
             ).collect()
         ]
         live = max((p for p in parts if p != COMPACT_PARTITION), default=0)
-        return max(live, self._read_hwm())
-
-    def _read_hwm(self) -> int:
-        """The bid high-water mark compact() persisted (0 if never)."""
-        fs, jp = self._fs(self.hwm_path)
-        if not fs.exists(jp):
-            return 0
-        stm = fs.open(jp)
-        try:
-            raw = bytes(
-                self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    stm
-                )
-            )
-        finally:
-            stm.close()
-        try:
-            return int(raw.decode().strip() or 0)
-        except ValueError:
-            return 0
-
-    def _write_hwm(self, hwm: int) -> None:
-        """Persist the bid high-water mark via write-aside + rename
-        (round-16 advisor): the old in-place ``fs.create(jp, True)``
-        truncated FIRST, so a crash mid-write during a later compact —
-        after a prior compact had already folded away the partitions
-        witnessing the mark — regressed ``max_real_batch()`` to 0,
-        exactly the bid-recycling hazard the mark exists to prevent.
-        The no-advance rewrite is SKIPPED entirely (that is the only
-        case where the file is the sole witness of the mark: when hwm
-        strictly advances, the live partitions witnessing the new value
-        are still present until compact's later drops, so the brief
-        delete→rename absence window cannot regress max_real_batch)."""
-        if int(hwm) == self._read_hwm():
-            return
-        fs, jp = self._fs(self.hwm_path)
-        tmp = self.spark._jvm.org.apache.hadoop.fs.Path(
-            self.hwm_path + "__tmp"
-        )
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(str(int(hwm)).encode()))
-        finally:
-            out.close()
-        if fs.exists(jp):
-            fs.delete(jp, False)
-        if not fs.rename(tmp, jp):
-            raise RuntimeError(
-                f"hwm rename failed: {self.hwm_path}__tmp -> "
-                f"{self.hwm_path}; high-water mark not updated — "
-                "re-run compact before dropping partitions"
-            )
+        return max(live, store_fs.read_int(self.spark, self.hwm_path, 0))
 
     def drop_batches_above(self, bid: int) -> None:
         """Drop every real batch partition with id > ``bid`` — the crash
@@ -377,7 +255,9 @@ class GramPostingsStore:
                     f"ALTER TABLE {self.name} "
                     f"DROP IF EXISTS PARTITION (batch={p})"
                 )
-                self._fs_delete(os.path.join(self.path, f"batch={p}"))
+                store_fs.delete(
+                    self.spark, os.path.join(self.path, f"batch={p}")
+                )
         self.spark.catalog.refreshTable(self.name)
 
     def _sized_tombstone_join(
@@ -459,67 +339,22 @@ class GramPostingsStore:
 
     # -- maintenance lease ---------------------------------------------------
 
-    def _acquire_lease(self) -> None:
-        """Create the lease file via ``FileSystem.createNewFile``.
-
-        Per-scheme guarantee (round-15 verdict #6 — stated exactly, no
-        silent ambiguity):
-
-        * **hdfs://** — atomic create-if-absent in the NameNode: two
-          concurrent compacts cannot both win; combined with the writer
-          markers the handshake is airtight.
-        * **file://, local** — createNewFile is check-then-create inside
-          one JVM call; atomic for all practical single-host
-          interleavings (the test geometry), racy only across hosts
-          sharing NFS.
-        * **object stores DECLARING
-          ``fs.capability.conditional.create``** (s3a on Hadoop 3.4.1+
-          with conditional writes enabled) — ATOMIC: the acquire routes
-          through a conditional PUT (``_atomic_create_if_absent``), so
-          exactly one of two racing maintainers wins even over
-          eventually-visible listings. This closes the round-15 caveat
-          where the connector supports it.
-        * **s3a:// and other object stores WITHOUT the capability** —
-          check-then-create over eventually-visible listings:
-          BEST-EFFORT. The lease converts the silent-corruption race
-          into a loud refusal in every interleaving where the PUT is
-          visible before the rival's existence check, but cannot close
-          the window. Deployments that compact concurrently from
-          multiple jobs on such stores should wrap maintenance in an
-          external lock (a DynamoDB/ZooKeeper mutex or the scheduler's
-          own mutual exclusion); the in-repo handshake is then defense
-          in depth, not the primary guarantee.
-        """
-        fs, jp = self._fs(self.lease_path)
-        if not _atomic_create_if_absent(fs, jp):
-            raise StoreMaintenanceLockError(
-                f"maintenance lease already held for {self.name} "
-                f"({self.lease_path}); a compact() is in flight or "
-                "crashed — break_lease() / compact(force=True) after "
-                "confirming no writer is live"
-            )
-        self._lease_held = True
-
-    def _release_lease(self) -> None:
-        self._lease_held = False
-        self._fs_delete(self.lease_path)
-
     def break_lease(self) -> None:
         """Crash repair: drop a lease left by a dead compact() AND any
         in-progress writer markers left by dead writers. The operator's
         responsibility to confirm the holders are gone — the
         single-writer discipline the reference's own maintenance windows
         assume (between-chunk idle time, BatchChunker.pm:70-178)."""
-        self._release_lease()
-        self._fs_delete(self.writers_path)
+        self._lease.break_lease()
+        store_fs.delete(self.spark, self.writers_path)
 
     def _refuse_if_maintenance(self, op: str) -> None:
         """Writers call this first: refuse while a compact holds the
         lease (FS metadata check — one RPC, no job). The in-process
-        compact's own fold insert passes via ``_lease_held``."""
-        if self._lease_held:
+        compact's own fold insert passes via ``_lease.held``."""
+        if self._lease.held:
             return
-        fs, jp = self._fs(self.lease_path)
+        fs, jp = store_fs.fs_for(self.spark, self.lease_path)
         if fs.exists(jp):
             raise StoreMaintenanceLockError(
                 f"{op} refused: maintenance lease held for {self.name} "
@@ -530,7 +365,7 @@ class GramPostingsStore:
     def _writer_markers(self) -> "list[str]":
         """Names of live in-progress writer markers (empty when no write
         is in flight). FS metadata only — one listStatus, no job."""
-        fs, jp = self._fs(self.writers_path)
+        fs, jp = store_fs.fs_for(self.spark, self.writers_path)
         if not fs.exists(jp):
             return []
         return [st.getPath().getName() for st in fs.listStatus(jp)]
@@ -550,41 +385,40 @@ class GramPostingsStore:
                 "cleared by break_lease() / compact(force=True)"
             )
 
+    @contextmanager
+    def _marker(self, op: str, keep_on_error: bool):
+        """One in-progress writer marker under ``writers_path``, created
+        BEFORE the lease check and removed on exit — except, with
+        ``keep_on_error``, when the guarded body raised. A refused start
+        always removes it (nothing was committed)."""
+        marker = f"{self.writers_path}/{uuid.uuid4().hex}"
+        store_fs.touch(self.spark, marker)
+        started = ok = False
+        try:
+            self._refuse_if_maintenance(op)
+            started = True
+            yield
+            ok = True
+        finally:
+            if ok or not (started and keep_on_error):
+                store_fs.delete(self.spark, marker)
+
     def _writing(self, op: str):
-        """Writer-side half of the maintenance handshake (round-15
-        advisor): the lease alone only stops writers that START after
-        compact() acquires it — a Spark write already in flight when the
-        lease lands would still be folded-then-dropped. Protocol: the
-        writer drops an in-progress MARKER first, THEN checks the lease
-        (removing the marker and refusing if held); compact() acquires
-        the lease first, THEN refuses if any marker is live, and
-        re-checks markers between its fold and its partition drops.
-        Under either interleaving one side sees the other on any FS with
-        immediate namespace visibility (hdfs://, file://); on s3a:// the
-        same eventual-visibility caveat as the lease applies (see
-        ``_acquire_lease``)."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def _cm():
-            if self._lease_held:
-                # the compactor's own fold insert: the lease IS the claim
-                yield
-                return
-            marker = self.writers_path + "/" + uuid.uuid4().hex
-            fs, jdir = self._fs(self.writers_path)
-            if not fs.exists(jdir):
-                fs.mkdirs(jdir)
-            jm = self.spark._jvm.org.apache.hadoop.fs.Path(marker)
-            fs.createNewFile(jm)
-            try:
-                self._refuse_if_maintenance(op)
-                yield
-            finally:
-                if fs.exists(jm):
-                    fs.delete(jm, False)
-
-        return _cm()
+        """Writer-side half of the maintenance handshake: the lease alone
+        only stops writers that START after compact() acquires it — a
+        Spark write already in flight when the lease lands would still be
+        folded-then-dropped. Protocol: the writer drops an in-progress
+        MARKER first, THEN checks the lease (removing the marker and
+        refusing if held); compact() acquires the lease first, THEN
+        refuses if any marker is live, and re-checks markers between its
+        fold and its partition drops. Under either interleaving one side
+        sees the other on any FS with immediate namespace visibility
+        (hdfs://, file://); on object stores the lease's per-scheme
+        caveat applies (:class:`store_fs.StoreLease`)."""
+        if self._lease.held:
+            # the compactor's own fold insert: the lease IS the claim
+            return nullcontext()
+        return self._marker(op, keep_on_error=False)
 
     def run_guard(self, op: str = "run"):
         """RUN-level writer marker (context manager): hold one in-progress
@@ -621,29 +455,7 @@ class GramPostingsStore:
         repairs — the deliberate trade: a spurious block after a
         before-first-chunk failure costs one break_lease(), a compact
         over unrepaired claims costs the store."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def _cm():
-            marker = self.writers_path + "/" + uuid.uuid4().hex
-            fs, jdir = self._fs(self.writers_path)
-            if not fs.exists(jdir):
-                fs.mkdirs(jdir)
-            jm = self.spark._jvm.org.apache.hadoop.fs.Path(marker)
-            fs.createNewFile(jm)
-            try:
-                self._refuse_if_maintenance(op)
-            except BaseException:
-                # refused to START: nothing committed, nothing to repair
-                if fs.exists(jm):
-                    fs.delete(jm, False)
-                raise
-            yield
-            # clean exit ONLY — an exception skips this delete by design
-            if fs.exists(jm):
-                fs.delete(jm, False)
-
-        return _cm()
+        return self._marker(op, keep_on_error=True)
 
     # -- writes --------------------------------------------------------------
 
@@ -723,18 +535,13 @@ class GramPostingsStore:
         that START after it lands, and writers' in-progress MARKERS stop
         a compact from proceeding over a Spark write already in flight —
         checked after lease acquisition and AGAIN between the fold and
-        the partition drops. Guarantee strength is per-scheme — atomic on
-        hdfs://, single-host-safe on file://, best-effort on s3a://
-        (see ``_acquire_lease``; object-store deployments compacting
-        from multiple jobs should add an external lock)."""
+        the partition drops. Guarantee strength is per-scheme (see
+        :class:`store_fs.StoreLease`)."""
         if force:
             self.break_lease()
-        self._acquire_lease()
-        try:
+        with self._lease:
             self._refuse_if_writers("start")
             self._compact_locked()
-        finally:
-            self._release_lease()
 
     def _compact_locked(self) -> None:
         base = (
@@ -764,14 +571,12 @@ class GramPostingsStore:
         # persist the bid high-water mark BEFORE dropping the partitions
         # that witness it: batch ids stay monotone across compactions
         # (max_real_batch's contract — a recycled bid would collide the
-        # next onboarding's sink dirs and probe snapshot)
-        hwm = max(
-            [p for p in parts if p != COMPACT_PARTITION]
-            + [self._read_hwm()],
-            default=0,
-        )
-        if hwm > 0:
-            self._write_hwm(hwm)
+        # next onboarding's sink dirs and probe snapshot). A compact
+        # that adds no batch leaves the file untouched.
+        cur = store_fs.read_int(self.spark, self.hwm_path, 0)
+        hwm = max([p for p in parts if p != COMPACT_PARTITION] + [cur])
+        if hwm > cur:
+            store_fs.write_int(self.spark, self.hwm_path, hwm)
         for p in sorted(parts):
             if p == COMPACT_PARTITION:
                 continue
@@ -781,9 +586,9 @@ class GramPostingsStore:
             # external table: DROP PARTITION is metadata-only — delete the
             # files through the path's own FileSystem or register() would
             # resurrect them
-            self._fs_delete(os.path.join(self.path, f"batch={p}"))
-        self._fs_delete(self.tombstone_path)
-        self._fs_delete(self.staging_path)
+            store_fs.delete(self.spark, os.path.join(self.path, f"batch={p}"))
+        store_fs.delete(self.spark, self.tombstone_path)
+        store_fs.delete(self.spark, self.staging_path)
         self.spark.catalog.refreshTable(self.name)
 
     # -- probe ----------------------------------------------------------------
@@ -902,18 +707,6 @@ class GramPostingsStore:
         )
         self.add_postings(kept, bid, n)
         return result
-
-    # -- Hadoop FS helpers ------------------------------------------------------
-
-    def _fs(self, path: str):
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, jpath
-
-    def _fs_delete(self, path: str) -> None:
-        fs, jpath = self._fs(path)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
 
 
 def temp_store(
@@ -1178,9 +971,7 @@ def drop_sink_batches_above(
     alone, so a still-live run's ``b{i}`` dirs above the mark and its
     ``__publish_*`` staging would be destroyed along with the crashed
     run's residue."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    root = jp(sink_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = store_fs.fs_for(spark, sink_dir)
     if not fs.exists(root):
         return
     for st in fs.listStatus(root):
@@ -1640,9 +1431,7 @@ def onboard_corpus_wave(
             .parquet(staging)
         )
         jPath = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jPath(sink_dir).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
+        fs, _ = store_fs.fs_for(spark, sink_dir)
         for b in sorted(sunk_bids):
             src = jPath(os.path.join(staging, f"__bid={b}"))
             if not fs.exists(src):
@@ -1662,16 +1451,16 @@ def onboard_corpus_wave(
             dst = jPath(os.path.join(sink_dir, f"b{b}"))
             if fs.exists(dst):
                 fs.delete(dst, True)
-            if not fs.rename(src, dst):
-                # the dst was just deleted, so a failed rename here has
-                # the final rows ONLY in staging — raising before the
-                # staging delete keeps that recoverable copy (round-16
-                # advisor)
-                raise RuntimeError(
-                    f"wave publish rename failed for bid {b}: {src} -> "
-                    f"{dst}; staging dir {staging} kept — it holds the "
-                    "post-reconcile rows for recovery"
+            try:
+                store_fs.checked_rename(fs, src, dst)
+            except RuntimeError as e:
+                # the dst was just deleted, so the final rows are ONLY in
+                # staging — raising before the staging delete keeps them
+                e.add_note(
+                    f"wave publish of bid {b}: staging dir {staging} kept "
+                    "— it holds the post-reconcile rows for recovery"
                 )
+                raise
         fs.delete(jPath(staging), True)
         # the published dirs ARE the final rows — read them back rather
         # than returning the lazy join (whose phase-1 sources the renames

@@ -17,6 +17,8 @@ from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import store_fs
+
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
 
@@ -135,8 +137,15 @@ def scan_width(df: DataFrame) -> int:
     overflow — validated piece-for-piece against the ``.rdd`` count on
     every testdata table at three SFs. Past 256 files the count is
     extrapolated (such scans are wide and pass the spread check either
-    way). Frames not rooted in a file scan (in-memory fixtures) fall
-    back to the exact ``.rdd`` probe."""
+    way).
+
+    Precondition: ``df`` is SCAN-ROOTED — a file scan under narrow
+    operators only (filter, project), so its width is the scan's split
+    count. A frame with an exchange, join or union above its scans still
+    lists ``inputFiles()``, but its width is not theirs, and the
+    estimate is meaningless for it. A frame with no input files (an
+    in-memory ``createDataFrame`` fixture) falls back to the exact
+    ``.rdd`` count."""
     import math
 
     try:
@@ -162,12 +171,10 @@ def scan_width(df: DataFrame) -> int:
     w = _SCAN_WIDTH_MEMO.get(key)
     if w is not None:
         return w
-    jvm = spark._jvm
-    jconf = spark._jsc.hadoopConfiguration()
     sizes = []
     for f in files[:256]:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        sizes.append(p.getFileSystem(jconf).getFileStatus(p).getLen())
+        fs, p = store_fs.fs_for(spark, f)
+        sizes.append(fs.getFileStatus(p).getLen())
     weighted = sum(sizes) + len(sizes) * open_cost
     max_split = min(max_pb, max(open_cost, weighted // max(min_pn, 1)))
     pieces = []

@@ -25,6 +25,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..operators import store_fs
+
 _TEXT_FORMATS = {"csv", "json"}
 _FORMATS = {"parquet", "orc", "csv", "json"}
 
@@ -61,9 +63,7 @@ def infer_schema_sample(
     first ``sample_files`` files and let the format's inference run on just
     those. The returned schema is then passed explicitly to every real
     read."""
-    sc = spark.sparkContext
-    jvm_path = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = jvm_path.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, jvm_path = store_fs.fs_for(spark, path)
     if fs.isDirectory(jvm_path):
         statuses = [s for s in fs.listStatus(jvm_path) if s.isFile()]
         names = (str(s.getPath()) for s in statuses)

@@ -51,6 +51,7 @@ from dbix_batchchunker_spark.operators.gram_store import (
     repair_crashed_onboarding,
 )
 from dbix_batchchunker_spark.operators.registry import t
+from dbix_batchchunker_spark.operators.store_fs import touch
 from dbix_batchchunker_spark.operators.stream import fold_outputs, read_outputs
 from dbix_batchchunker_spark.session import get_spark
 
@@ -102,12 +103,7 @@ def main() -> None:
     # point, and a real crash skips run_guard's clean-exit delete, so
     # plant the marker the dead run would leave
     onboard_corpus_wave(drop3, store, target_chunks=4, sink_dir=out)
-    fs, jdir = store._fs(store.writers_path)
-    if not fs.exists(jdir):
-        fs.mkdirs(jdir)
-    fs.createNewFile(
-        spark._jvm.org.apache.hadoop.fs.Path(store.writers_path + "/dead")
-    )
+    touch(spark, store.writers_path + "/dead")
     try:
         store.compact()
         raise AssertionError("compact must refuse over a dead run")

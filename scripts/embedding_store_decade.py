@@ -192,11 +192,9 @@ def main():
         # --- fixed-increment APPEND (flat claim; disjoint id ranges — the
         # watermark refuses reuse, so every range starts past the CURRENT
         # mark: a cached-store re-run keys past its prior appends) --------
-        from dbix_batchchunker_spark.operators.similarity import (
-            _read_vec_hwm,
-        )
+        from dbix_batchchunker_spark.operators.store_fs import read_int
 
-        hwm0 = max(_read_vec_hwm(spark, store_path) or 0, INC_ID_BASE)
+        hwm0 = max(read_int(spark, f"{store_path}/vec_id_hwm"), INC_ID_BASE)
         appends = []
         first_batch_lo = None
         for k in range(ATTEMPTS):

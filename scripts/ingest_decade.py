@@ -322,17 +322,7 @@ def main():
             # restore the cached store: drop every onboarded partition —
             # after EVERY attempt now that bids offset past the live
             # partition list (see the arm comment above)
-            for r in spark.sql(f"SHOW PARTITIONS {store.name}").collect():
-                p = int(r[0].split("=", 1)[1])
-                if p >= 1:
-                    spark.sql(
-                        f"ALTER TABLE {store.name} "
-                        f"DROP IF EXISTS PARTITION (batch={p})"
-                    )
-                    store._fs_delete(
-                        os.path.join(store.path, f"batch={p}")
-                    )
-            spark.catalog.refreshTable(store.name)
+            store.drop_batches_above(0)
 
         # drop run_new's batch=1 before the onboarding arm: the offset-
         # aware onboard operators would otherwise fold it into base_bid

@@ -41,7 +41,6 @@ def run_arm(spark, batchrows: int, classes: int, clusters: int):
         SIM06_NPROBE,
         IvfIndex,
         _probe_entries,
-        _store_fs,
         append_embedding_store,
         build_ivf_index,
         incremental_embedding_near_dups,
@@ -49,6 +48,7 @@ def run_arm(spark, batchrows: int, classes: int, clusters: int):
         norm,
         save_embedding_store,
     )
+    from dbix_batchchunker_spark.operators.store_fs import fs_for
     from dbix_batchchunker_spark.streaming.incremental import (
         process_available,
     )
@@ -60,7 +60,7 @@ def run_arm(spark, batchrows: int, classes: int, clusters: int):
 
     def ingest(batch_df, bid):
         emb = batch_df.withColumn("nrm", norm(F.col("embedding")))
-        fs, _ = _store_fs(spark, store_path)
+        fs, _ = fs_for(spark, store_path)
         if not fs.exists(jp(f"{store_path}/vectors")):
             trained = build_ivf_index(emb, clusters=clusters)
             index = IvfIndex(

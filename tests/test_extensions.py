@@ -3149,3 +3149,14 @@ def test_chunked_dml_fuzz_parity(spark, tmp_path, seed):
         assert len(spark_pdf) == len(duck_pdf), (name, seed)
         assert _canon_pdf(spark_pdf) == _canon_pdf(duck_pdf), (name, seed)
     conn.close()
+
+
+def test_scan_width_in_memory_fallback(spark):
+    """scan_width's documented fallback: a frame with no input files
+    (an in-memory fixture) reports its exact partition count."""
+    from dbix_batchchunker_spark.operators.registry import scan_width
+
+    df = spark.createDataFrame([(i,) for i in range(40)], "x long")
+    assert df.inputFiles() == []
+    assert scan_width(df) == df.rdd.getNumPartitions()
+    assert scan_width(spark.range(0, 10, numPartitions=3)) == 3

@@ -10,12 +10,14 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from dbix_batchchunker_spark.operators import store_fs
 from dbix_batchchunker_spark.operators.gram_store import (
     COMPACT_PARTITION,
     GramPostingsStore,
     cleanup_store,
     temp_store,
 )
+from dbix_batchchunker_spark.operators.store_fs import fs_for, read_int
 from dbix_batchchunker_spark.operators.text import (
     _positional_grams,
     incremental_substring_dedup,
@@ -322,7 +324,7 @@ def test_compact_lease_refuses_second_writer(spark, docs):
         other = GramPostingsStore(
             spark, store.name + "_w2", store.path, store.n_buckets
         )
-        other._acquire_lease()
+        other._lease.acquire()
         with pytest.raises(StoreMaintenanceLockError):
             store.compact()
         with pytest.raises(StoreMaintenanceLockError):
@@ -335,10 +337,10 @@ def test_compact_lease_refuses_second_writer(spark, docs):
         store.compact()
         assert store._tombstones() is None
         # crash repair path 2: a stale lease + force=True in one call
-        other._acquire_lease()
+        other._lease.acquire()
         store.compact(force=True)
         # the lease is released after a successful compact
-        fs, jp = store._fs(store.lease_path)
+        fs, jp = fs_for(spark, store.lease_path)
         assert not fs.exists(jp)
     finally:
         cleanup_store(store)
@@ -587,7 +589,7 @@ def test_randomized_lifecycle_matches_model(spark, seed):
                 holder = GramPostingsStore(
                     spark, store.name + "_h", store.path, store.n_buckets
                 )
-                holder._acquire_lease()
+                holder._lease.acquire()
                 one = spark.createDataFrame([(0, "aa bb cc dd")],
                                             "doc_id long, text string")
                 with pytest.raises(StoreMaintenanceLockError):
@@ -704,7 +706,7 @@ def test_compact_refuses_in_flight_writer_marker(spark, docs):
         assert store._writer_markers() == []
         # a FOREIGN writer's in-flight marker (exactly what its _writing
         # context holds mid-write): compact refuses at start
-        fs, jdir = store._fs(store.writers_path)
+        fs, jdir = fs_for(spark, store.writers_path)
         fs.mkdirs(jdir)
         jm = spark._jvm.org.apache.hadoop.fs.Path(
             store.writers_path + "/inflight_test"
@@ -713,7 +715,7 @@ def test_compact_refuses_in_flight_writer_marker(spark, docs):
         with pytest.raises(StoreMaintenanceLockError):
             store.compact()
         # the refusal released the lease — writers are not locked out
-        lfs, jl = store._fs(store.lease_path)
+        lfs, jl = fs_for(spark, store.lease_path)
         assert not lfs.exists(jl)
         fs.delete(jm, False)
 
@@ -1319,9 +1321,9 @@ def test_wave_refusal_leaks_no_conf_or_marker(spark):
     conf = "spark.sql.sources.partitionOverwriteMode"
     prior = spark.conf.get(conf, None)
     # a FOREIGN maintainer's lease (another process's compact): the file,
-    # not _acquire_lease on this instance — _lease_held would pass the
+    # not _lease.acquire on this instance — _lease.held would pass the
     # in-process compactor short-circuit and defeat the refusal
-    fs, jp = store._fs(store.lease_path)
+    fs, jp = fs_for(spark, store.lease_path)
     try:
         fs.createNewFile(jp)
         if prior is not None:
@@ -1374,7 +1376,7 @@ def test_crashed_sink_onboarding_full_repair(spark, tmp_path):
         )
         # the dead run's retained run_guard marker (a real crash skips
         # the clean-exit delete; plant what it leaves)
-        fs, jdir = store._fs(store.writers_path)
+        fs, jdir = fs_for(spark, store.writers_path)
         if not fs.exists(jdir):
             fs.mkdirs(jdir)
         fs.createNewFile(
@@ -1539,10 +1541,7 @@ def test_persisted_embedding_store_compact_and_roundtrip(spark, tmp_path):
     kept_e = {r.vec_id for r in e4.select("vec_id").collect()}  # bounded
     assert not any(v % 5 == 0 and v < 400 for v in kept_e)
     # no swap residue left behind
-    fs, _ = __import__(
-        "dbix_batchchunker_spark.operators.similarity",
-        fromlist=["_store_fs"],
-    )._store_fs(spark, path)
+    fs, _ = fs_for(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
     for residue in ("entries__next", "vectors__next", "entries__old",
                     "vectors__old"):
@@ -1607,13 +1606,12 @@ def test_persisted_store_mid_swap_crash_converges(spark, tmp_path):
     - live absent + __old AND __next  -> roll FORWARD (complete swap)
     """
     from dbix_batchchunker_spark.operators.similarity import (
-        _store_fs,
         compact_persisted_embedding_store,
         load_embedding_store,
     )
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
-    fs, _ = _store_fs(spark, path)
+    fs, _ = fs_for(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
 
     # --- crash point A: rename(live, old) done, rename(next, live) not,
@@ -1665,7 +1663,6 @@ def test_persisted_store_between_halves_window_pairs_correct(
     pair listing EQUALS the fully-compacted listing and (b) the
     compacting re-run converges the store with no residue."""
     from dbix_batchchunker_spark.operators.similarity import (
-        _store_fs,
         _write_entries,
         compact_embedding_store,
         compact_persisted_embedding_store,
@@ -1674,7 +1671,7 @@ def test_persisted_store_between_halves_window_pairs_correct(
     )
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
-    fs, _ = _store_fs(spark, path)
+    fs, _ = fs_for(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
 
     purged = spark.range(0, 300, 5).select(F.col("id").alias("vec_id"))
@@ -1733,7 +1730,7 @@ def test_persisted_store_compact_crash_sweep_converges(
     tests pin points A/B by reconstructing the layout; this sweep drives
     the REAL compact and kills it at each of its four swap renames
     (entries live→old, entries next→live, vectors live→old, vectors
-    next→live) via an injected _checked_rename failure. After every
+    next→live) via an injected store_fs.checked_rename failure. After every
     crash point: (a) a plain load succeeds (repairing as needed), and
     (b) an unpatched compacting re-run converges to the clean result —
     survivor count, full pair listing, zero swap residue. The aside
@@ -1752,7 +1749,7 @@ def test_persisted_store_compact_crash_sweep_converges(
         for r in sim.store_near_dup_pairs(e_clean, v_clean).collect()
     }
 
-    real_rename = sim._checked_rename
+    real_rename = store_fs.checked_rename
     calls = {"n": 0}
 
     def dying_rename(fs, src, dst):
@@ -1761,10 +1758,10 @@ def test_persisted_store_compact_crash_sweep_converges(
             raise RuntimeError(f"injected crash at swap rename {crash_at}")
         real_rename(fs, src, dst)
 
-    monkeypatch.setattr(sim, "_checked_rename", dying_rename)
+    monkeypatch.setattr(store_fs, "checked_rename", dying_rename)
     with pytest.raises(RuntimeError, match="injected crash"):
         sim.compact_persisted_embedding_store(spark, path, purged)
-    monkeypatch.setattr(sim, "_checked_rename", real_rename)
+    monkeypatch.setattr(store_fs, "checked_rename", real_rename)
 
     # (a) the store is readable at every crash point (load repairs a
     # half whose live dir is absent)
@@ -1780,7 +1777,7 @@ def test_persisted_store_compact_crash_sweep_converges(
         for r in sim.store_near_dup_pairs(e_c, v_c).collect()
     }
     assert final == expected
-    fs, _ = sim._store_fs(spark, path)
+    fs, _ = fs_for(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
     for residue in (
         "entries__next", "entries__old", "vectors__next", "vectors__old"
@@ -1799,11 +1796,7 @@ class _CondCreateFS:
         self._fs = fs
 
     def hasPathCapability(self, jp, cap):
-        from dbix_batchchunker_spark.operators.gram_store import (
-            CONDITIONAL_CREATE_CAPABILITY,
-        )
-
-        return cap == CONDITIONAL_CREATE_CAPABILITY
+        return cap == store_fs.CONDITIONAL_CREATE_CAPABILITY
 
     def createFile(self, jp):
         return self._fs.createFile(jp)
@@ -1820,10 +1813,7 @@ def test_atomic_create_if_absent_routes_by_capability(spark, tmp_path):
     the capability is up (exactly one of two racing maintainers wins),
     createNewFile otherwise, and a NON-exists IO failure re-raises
     instead of reading as 'lease held'."""
-    from dbix_batchchunker_spark.operators.gram_store import (
-        _atomic_create_if_absent,
-    )
-
+    _atomic_create_if_absent = store_fs._atomic_create_if_absent
     jp = spark._jvm.org.apache.hadoop.fs.Path
     real = jp(str(tmp_path)).getFileSystem(
         spark._jsc.hadoopConfiguration()
@@ -1861,12 +1851,11 @@ def test_embedding_store_lease_release_is_noop_unless_held(
     )
     from dbix_batchchunker_spark.operators.similarity import (
         EmbeddingStoreLease,
-        _store_fs,
     )
 
     path = str(tmp_path / "store")
     holder = EmbeddingStoreLease(spark, path).acquire()
-    fs, _ = _store_fs(spark, path)
+    fs, _ = fs_for(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path(holder.lease_path)
 
     bystander = EmbeddingStoreLease(spark, path)
@@ -1894,7 +1883,6 @@ def test_retrain_embedding_store_fresh_geometry_same_pairs(
     from dbix_batchchunker_spark.operators.similarity import (
         SIM06_NPROBE,
         _probe_entries,
-        _read_vec_hwm,
         append_embedding_store,
         load_embedding_store,
         load_ivf_index,
@@ -1939,7 +1927,7 @@ def test_retrain_embedding_store_fresh_geometry_same_pairs(
     assert post == pre
     # the keyset discipline carries over: the fresh watermark equals the
     # live max, so an id-reusing append refuses on the retrained store
-    assert _read_vec_hwm(spark, dst) == 1291
+    assert read_int(spark, f"{dst}/vec_id_hwm") == 1291
     with pytest.raises(ValueError, match="reuses vec_ids"):
         append_embedding_store(dst, cp_entries, copies)
     # and the in-place form refuses up front
@@ -1966,7 +1954,6 @@ def test_streaming_append_replay_is_idempotent_through_dedup(
     from dbix_batchchunker_spark.operators.similarity import (
         SIM06_NPROBE,
         _probe_entries,
-        _read_vec_hwm,
         append_embedding_store,
         incremental_embedding_near_dups,
         load_embedding_store,
@@ -2013,7 +2000,7 @@ def test_streaming_append_replay_is_idempotent_through_dedup(
 
     n1 = dedup_and_append()
     assert n1 >= 1  # the fresh row survived and was appended
-    hwm_after_first = _read_vec_hwm(spark, path)
+    hwm_after_first = read_int(spark, f"{path}/vec_id_hwm")
     _, e1, v1 = load_embedding_store(spark, path)
     count_e, count_v = e1.count(), v1.count()
 
@@ -2021,7 +2008,7 @@ def test_streaming_append_replay_is_idempotent_through_dedup(
     # against its committed copy; the append must no-op, not refuse
     n2 = dedup_and_append()
     assert n2 == 0
-    assert _read_vec_hwm(spark, path) == hwm_after_first
+    assert read_int(spark, f"{path}/vec_id_hwm") == hwm_after_first
     _, e2, v2 = load_embedding_store(spark, path)
     assert (e2.count(), v2.count()) == (count_e, count_v)
 
@@ -2110,13 +2097,10 @@ def test_append_embedding_store_refuses_reused_vec_ids(spark, tmp_path):
     """Round-16 verdict #2: vec_ids are never reused — a reusing append
     refuses LOUDLY against the persisted watermark (the gram store's
     max_real_batch precedent), a fresh-keyed append advances it, and a
-    legacy store (no watermark file) derives the mark from live vectors
-    before judging."""
+    store missing the watermark file refuses, naming the file."""
     from dbix_batchchunker_spark.operators.similarity import (
         SIM06_NPROBE,
         _probe_entries,
-        _read_vec_hwm,
-        _store_fs,
         append_embedding_store,
         load_embedding_store,
         load_ivf_index,
@@ -2124,7 +2108,7 @@ def test_append_embedding_store_refuses_reused_vec_ids(spark, tmp_path):
     )
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
-    assert _read_vec_hwm(spark, path) == 299
+    assert read_int(spark, f"{path}/vec_id_hwm") == 299
 
     idx = load_ivf_index(spark, f"{path}/index")
 
@@ -2156,19 +2140,19 @@ def test_append_embedding_store_refuses_reused_vec_ids(spark, tmp_path):
     # fresh keys append and advance the watermark
     e_ok, b_ok = batch(1000)
     append_embedding_store(path, e_ok, b_ok)
-    assert _read_vec_hwm(spark, path) == 1019
+    assert read_int(spark, f"{path}/vec_id_hwm") == 1019
     _, _, v2 = load_embedding_store(spark, path)
     assert v2.count() == 320
 
-    # legacy store: delete the watermark file; the next append derives
-    # the mark from live vectors (1019) and still refuses reuse
-    fs, _ = _store_fs(spark, path)
+    # a missing watermark raises naming the file — never derived; the
+    # store is untouched and a restored mark serves again
+    fs, _ = fs_for(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
     fs.delete(jp(f"{path}/vec_id_hwm"), False)
-    e_leg, b_leg = batch(1010)
-    with pytest.raises(ValueError, match="reuses vec_ids"):
-        append_embedding_store(path, e_leg, b_leg)
-    assert _read_vec_hwm(spark, path) == 1019
+    e_new, b_new = batch(3000)
+    with pytest.raises(FileNotFoundError, match="vec_id_hwm"):
+        append_embedding_store(path, e_new, b_new)
+    store_fs.write_int(spark, f"{path}/vec_id_hwm", 1019)
 
     # the crash-repair probe: no residue on a healthy store; after a
     # simulated half-committed append (vectors half landed, watermark
@@ -2219,17 +2203,14 @@ def test_save_ivf_index_leases_composite_store_parent(spark, tmp_path):
     # leases at its own path — granularity only widens inside a store
     solo = str(tmp_path / "solo_index")
     save_ivf_index(index, solo)
-    fs, _ = __import__(
-        "dbix_batchchunker_spark.operators.similarity",
-        fromlist=["_store_fs"],
-    )._store_fs(spark, solo)
+    fs, _ = fs_for(spark, solo)
     jp = spark._jvm.org.apache.hadoop.fs.Path
     assert not fs.exists(jp(str(tmp_path / "solo_index__maintenance_lease")))
     assert load_ivf_index(spark, solo).centroids.count() > 0
 
 
 def test_bid_hwm_write_is_atomic_and_skips_no_advance(spark, docs):
-    """Round-16 advisor (medium): _write_hwm used to truncate the mark
+    """Round-16 advisor (medium): the bid-hwm write used to truncate the mark
     in place — a crash mid-write during a no-new-batches compact (whose
     witnessing partitions a PRIOR compact already folded away) regressed
     max_real_batch() to 0, the exact bid-recycling hazard the mark
@@ -2238,33 +2219,34 @@ def test_bid_hwm_write_is_atomic_and_skips_no_advance(spark, docs):
     is the mark's sole witness)."""
     store = temp_store(spark, "gs_hwm_")
     try:
-        fs, jp = store._fs(store.hwm_path)
+        fs, jp = fs_for(spark, store.hwm_path)
         tmp = spark._jvm.org.apache.hadoop.fs.Path(
             store.hwm_path + "__tmp"
         )
 
-        store._write_hwm(5)
-        assert store._read_hwm() == 5
+        store_fs.write_int(spark, store.hwm_path, 5)
+        assert read_int(spark, store.hwm_path) == 5
         assert not fs.exists(tmp)
 
-        # no-advance rewrite is a no-op: the file is never touched, so
-        # there is no crash window at all (mtime pinned)
-        mtime = fs.getFileStatus(jp).getModificationTime()
-        store._write_hwm(5)
-        assert fs.getFileStatus(jp).getModificationTime() == mtime
-        assert store._read_hwm() == 5
-
         # an advance lands atomically with no residue
-        store._write_hwm(9)
-        assert store._read_hwm() == 9
+        store_fs.write_int(spark, store.hwm_path, 9)
+        assert read_int(spark, store.hwm_path) == 9
         assert not fs.exists(tmp)
 
         # end-to-end: compact persists the mark through the real path
         store.add_postings(docs.where("doc_id % 5 = 0"), bid=12)
         store.compact()
-        assert store._read_hwm() == 12
+        assert read_int(spark, store.hwm_path) == 12
         assert store.max_real_batch() == 12
         assert not fs.exists(tmp)
+
+        # no-advance rewrite is a no-op: a compact that adds no batch
+        # never touches the file, so there is no crash window at all
+        # (mtime pinned)
+        mtime = fs.getFileStatus(jp).getModificationTime()
+        store.compact()
+        assert fs.getFileStatus(jp).getModificationTime() == mtime
+        assert read_int(spark, store.hwm_path) == 12
     finally:
         cleanup_store(store)
 
@@ -2374,7 +2356,7 @@ def test_handshake_interleaving_fuzz(spark, docs, seed):
                 jm = spark._jvm.org.apache.hadoop.fs.Path(
                     store.writers_path + f"/ilv_{step}"
                 )
-                fs, jdir = store._fs(store.writers_path)
+                fs, jdir = fs_for(spark, store.writers_path)
                 orig_refuse = store._refuse_if_writers
                 orig_lease_check = writer._refuse_if_maintenance
 
@@ -2401,7 +2383,7 @@ def test_handshake_interleaving_fuzz(spark, docs, seed):
                 sync()
                 committed.append((bid, residue))
                 # the refused compact released its lease; writer finishes
-                lfs, jl = store._fs(store.lease_path)
+                lfs, jl = fs_for(spark, store.lease_path)
                 assert not lfs.exists(jl)
                 fs.delete(jm, False)
                 # nothing lost: the in-flight batch survived the abort
@@ -2415,7 +2397,7 @@ def test_handshake_interleaving_fuzz(spark, docs, seed):
                 # a compact's lease lands between the writer's marker
                 # and its lease check: the WRITER refuses, cleans its
                 # marker, and the store is untouched
-                lfs, jl = store._fs(store.lease_path)
+                lfs, jl = fs_for(spark, store.lease_path)
                 lfs.createNewFile(jl)
                 before = live_set()
                 orig_lease_check = writer._refuse_if_maintenance
@@ -2448,52 +2430,6 @@ def test_handshake_interleaving_fuzz(spark, docs, seed):
         cleanup_store(store)
 
 
-def test_append_refuses_legacy_dir_partitioned_entries(spark, tmp_path):
-    """Round-17 migration guard: an append onto a pre-round-17
-    directory-partitioned entries half would mix layouts (clustered
-    files at the root beside centroid_id= subdirs) and brick the read
-    path — it must refuse UP FRONT with the migration step, and one
-    compact must migrate the store so the retry lands."""
-    from dbix_batchchunker_spark.operators.similarity import (
-        SIM06_NPROBE,
-        _probe_entries,
-        append_embedding_store,
-        compact_persisted_embedding_store,
-        load_embedding_store,
-        load_ivf_index,
-    )
-
-    path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
-    # rewrite the entries half in the LEGACY layout (what a round-16
-    # save produced)
-    entries.select("vec_id", "centroid_id").write.mode(
-        "overwrite"
-    ).partitionBy("centroid_id").parquet(f"{path}/entries")
-
-    idx = load_ivf_index(spark, f"{path}/index")
-    batch = emb.where("vec_id < 10").select(
-        (F.col("vec_id") + 5000).alias("vec_id"),
-        "label", "embedding", "nrm",
-    )
-    b_entries = _probe_entries(batch, idx, SIM06_NPROBE).select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("bucket").alias("centroid_id"),
-    )
-    with pytest.raises(RuntimeError, match="pre-round-17"):
-        append_embedding_store(path, b_entries, batch)
-
-    # the documented migration: one compact reads the legacy layout and
-    # writes the clustered one (empty purge list = pure rewrite)
-    compact_persisted_embedding_store(
-        spark, path,
-        spark.createDataFrame([], "vec_id long"), n_deleted=0,
-    )
-    append_embedding_store(path, b_entries, batch)
-    _, e_live, v_live = load_embedding_store(spark, path)
-    assert v_live.count() == 310
-    assert e_live.where("vec_id >= 5000").count() == b_entries.count()
-
-
 def test_checked_rename_raises_and_load_repair_respects_lease(
     spark, tmp_path
 ):
@@ -2508,13 +2444,11 @@ def test_checked_rename_raises_and_load_repair_respects_lease(
     )
     from dbix_batchchunker_spark.operators.similarity import (
         EmbeddingStoreLease,
-        _checked_rename,
-        _store_fs,
         load_embedding_store,
     )
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
-    fs, _ = _store_fs(spark, path)
+    fs, _ = fs_for(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
 
     # the false-returning mode is FS-dependent (LocalFS throws on a
@@ -2525,7 +2459,7 @@ def test_checked_rename_raises_and_load_repair_respects_lease(
             return False
 
     with pytest.raises(RuntimeError, match="rename failed"):
-        _checked_rename(_FalseFs(), "src_path", "dst_path")
+        store_fs.checked_rename(_FalseFs(), "src_path", "dst_path")
 
     # plant a mid-swap absence, then hold the lease as a live compact
     # would: the load must refuse rather than repair under the
@@ -2540,3 +2474,108 @@ def test_checked_rename_raises_and_load_repair_respects_lease(
     # lease released (maintainer done/dead): the repair proceeds
     _, _, v = load_embedding_store(spark, path)
     assert v.count() == 300
+
+
+@pytest.mark.parametrize("case", ["crash_at_rename", "garbage"])
+@pytest.mark.parametrize("name", ["__bid_hwm", "vec_id_hwm", "n_vecs"])
+def test_metadata_file_crash_at_rename_and_garbage(
+    spark, tmp_path, monkeypatch, name, case
+):
+    """The stores' metadata files through a crash at the write's rename
+    (final file already deleted, ``__tmp`` complete): the reader
+    returns the NEW value, the next write succeeds, and no ``__tmp`` is
+    left. Garbage content raises naming the file instead of reading as
+    a value (the gram hwm used to read it as 0, regressing
+    max_real_batch)."""
+    store = None
+    if name == "__bid_hwm":
+        store = temp_store(spark, "gs_meta_", n_buckets=4)
+        path, read = store.hwm_path, store.max_real_batch
+    else:
+        path = str(tmp_path / "store" / name)
+
+        def read():
+            return read_int(spark, path)
+
+    fs, jp = fs_for(spark, path)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(path + "__tmp")
+    try:
+        store_fs.write_int(spark, path, 5)
+        if case == "garbage":
+            out = fs.create(jp, True)
+            out.write(bytearray(b"not-a-number"))
+            out.close()
+            with pytest.raises(ValueError, match=name):
+                read()
+            return
+
+        def dying_rename(fs_, src, dst):
+            raise RuntimeError("injected crash at rename")
+
+        monkeypatch.setattr(store_fs, "checked_rename", dying_rename)
+        with pytest.raises(RuntimeError, match="injected"):
+            store_fs.write_int(spark, path, 7)
+        monkeypatch.undo()
+        assert not fs.exists(jp) and fs.exists(tmp)
+
+        assert read() == 7
+        assert not fs.exists(tmp)
+        store_fs.write_int(spark, path, 8)
+        assert read() == 8
+        assert not fs.exists(tmp)
+    finally:
+        if store is not None:
+            cleanup_store(store)
+
+
+def test_save_ivf_index_resave_failure_keeps_meta(
+    spark, tmp_path, monkeypatch
+):
+    """A re-save of an existing index that fails after the meta.json
+    temp file is opened leaves the first save's meta.json intact: the
+    write goes aside and renames, so load_ivf_index still routes with
+    the first save's k_child (a truncate-in-place write left an empty
+    meta.json and a JSON decode error)."""
+    from dbix_batchchunker_spark.operators.similarity import (
+        IvfIndex,
+        load_ivf_index,
+        save_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    cents = spark.createDataFrame(
+        [(0, [0.0, 1.0])], "centroid_id long, centroid array<double>"
+    )
+    save_ivf_index(IvfIndex(cents, k_child=3), path)
+
+    class _DyingStream:
+        def __init__(self, out):
+            self._out = out
+
+        def write(self, data):
+            raise RuntimeError("injected failure mid-write")
+
+        def close(self):
+            self._out.close()
+
+    class _DyingCreateFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def create(self, jp_, overwrite):
+            return _DyingStream(self._fs.create(jp_, overwrite))
+
+        def __getattr__(self, attr):
+            return getattr(self._fs, attr)
+
+    real_fs_for = store_fs.fs_for
+
+    def dying_fs_for(spark_, p):
+        fs, jp_ = real_fs_for(spark_, p)
+        return _DyingCreateFS(fs), jp_
+
+    monkeypatch.setattr(store_fs, "fs_for", dying_fs_for)
+    with pytest.raises(RuntimeError, match="injected"):
+        save_ivf_index(IvfIndex(cents, k_child=7), path)
+    monkeypatch.undo()
+    assert load_ivf_index(spark, path).k_child == 3

@@ -59,3 +59,25 @@ def test_collect_calls_are_all_annotated_bounded():
         "driver materialization without a bounding comment within 8 lines: "
         f"{unexplained}"
     )
+
+
+def test_filesystem_primitives_only_in_store_fs():
+    """Every store's Hadoop-FileSystem IO goes through one module,
+    operators/store_fs.py: no other module opens a FileSystem handle,
+    renames, creates-if-absent or reads a whole file — so each store
+    primitive (handle, atomic metadata file, checked rename, lease,
+    swap) has exactly one implementation."""
+    substrate = PKG / "operators" / "store_fs.py"
+    offenders = [
+        f"{p.relative_to(PKG)}: {pat}"
+        for p, src in _sources()
+        if p != substrate
+        for pat in (
+            "getFileSystem(",
+            ".rename(",
+            "createNewFile(",
+            "IOUtils.toByteArray",
+        )
+        if pat in src
+    ]
+    assert not offenders, f"filesystem IO outside store_fs.py: {offenders}"
