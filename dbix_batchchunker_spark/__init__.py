@@ -16,8 +16,8 @@ Layout:
 
 from .chunker import BatchChunker, ConcurrentChunker
 from .loop_state import LoopState
-from .retry import RetryExhaustedError, run_with_retry
+from .retry import run_with_retry
 
 __version__ = "0.1.0"
 
-__all__ = ["BatchChunker", "ConcurrentChunker", "LoopState", "run_with_retry", "RetryExhaustedError"]
+__all__ = ["BatchChunker", "ConcurrentChunker", "LoopState", "run_with_retry"]

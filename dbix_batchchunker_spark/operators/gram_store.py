@@ -1272,12 +1272,8 @@ def onboard_corpus_wave(
             # partition; the floor formula is collision-free ONLY while the
             # stride stays fixed at chunk_size (static ranges, target_time
             # =0) — fail loudly if resizing ever turns on (round-14
-            # advisor). The static concurrent path keeps bc._ls unset and
-            # cuts ranges from bc.chunk_size; the wave-adaptive path
-            # resizes via the live LoopState, so check whichever is live.
-            stride = (
-                bc._ls.chunk_size if bc._ls is not None else bc.chunk_size
-            )
+            # advisor). Ranges are cut from the live LoopState's size.
+            stride = bc._ls.chunk_size
             if stride != chunk_size:
                 # RuntimeError, not assert: the guard must survive
                 # ``python -O`` — a stripped assert here would let a

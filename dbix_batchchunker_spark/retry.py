@@ -18,17 +18,14 @@ from typing import Callable, Optional, TypeVar
 T = TypeVar("T")
 
 
-class RetryExhaustedError(RuntimeError):
-    """All retry attempts failed; carries the last underlying error."""
-
-
 def run_with_retry(
     fn: Callable[[], T],
     max_attempts: int = 1,
     retry_handler: Optional[Callable[[BaseException, int], bool]] = None,
     on_retry: Optional[Callable[[BaseException, int], None]] = None,
 ) -> T:
-    """Run ``fn`` up to ``max_attempts`` times.
+    """Run ``fn`` up to ``max_attempts`` times; once they run out (or the
+    handler vetoes), the last error is re-raised unchanged.
 
     ``retry_handler(exc, attempt)`` may veto further attempts by returning
     a falsy value (mirrors DBIx::Connector::Retry's ``retry_handler``).

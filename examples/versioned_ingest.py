@@ -5,11 +5,11 @@
                              between corpus versions in ONE full-outer
                              join — decide what to re-process BEFORE
                              touching 100 TB)
-  2. wave-adaptive chunking  (ConcurrentChunker(wave_adaptive=True):
+  2. adaptive chunking       (ConcurrentChunker with target_time > 0:
                              validate the delta max_in_flight wide, chunk
-                             size converging on target_time between waves
-                             — the READ side, where ranges can be any
-                             width)
+                             size converging on target_time as chunks
+                             complete — the READ side, where ranges can
+                             be any width)
   3. compensating commits    (compensating_chunk_overwrite: each chunk
                              stages, promotes, and commit-markers its
                              buckets. The protocol's atomic unit is the
@@ -66,7 +66,7 @@ def main() -> None:
                  delta.groupBy("status").agg(F.count("*").alias("n")).collect()}
     print(f"delta: {by_status}")
 
-    # --- 2. wave-adaptive READ pass over the touched range --------------
+    # --- 2. adaptive READ pass over the touched range -------------------
     touched = delta.where(F.col("status") != "added")
     lo, hi = touched.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     validated = []
@@ -77,7 +77,7 @@ def main() -> None:
         min_id=int(lo), max_id=int(hi),
         chunk_size=200, target_time=2.0, sleep=0,
     )
-    ConcurrentChunker(bc, max_in_flight=4, wave_adaptive=True).execute()
+    ConcurrentChunker(bc, max_in_flight=4).execute()
     print(f"validated {sum(validated)} rows in {len(validated)} adaptive "
           f"chunks (converged chunk_size={bc.chunk_size})")
 

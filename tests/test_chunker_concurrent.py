@@ -8,6 +8,9 @@ loop, not in dispatch."""
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 
 from dbix_batchchunker_spark import BatchChunker, ConcurrentChunker
@@ -151,20 +154,11 @@ def test_concurrent_budget_expiring_during_sleep_blocks_submission():
     assert any("maximum run time" in m for m in bc.messages)
 
 
-def test_wave_adaptive_requires_target_time():
-    bc = BatchChunker(
-        coderef=lambda *a: None, min_id=1, max_id=10, chunk_size=5,
-        target_time=0, sleep=0,
-    )
-    with pytest.raises(ValueError, match="wave_adaptive requires target_time"):
-        ConcurrentChunker(bc, wave_adaptive=True)
-
-
 def test_wave_adaptive_grows_chunk_size_too_fast():
     """Concurrent analog of the serial too-fast targeting (t/dbic.t:255-352
     idiom): 0.1 s chunks against a 10 s target must double chunk_size after
-    every 5 under-target samples, with the growth applied to the NEXT
-    wave's ranges. Deterministic even with 3 live workers: every runtime
+    every 5 under-target samples, with the growth applied to the ranges
+    cut after it. Deterministic even with 3 live workers: every runtime
     is far under target regardless of fake-clock interleaving, so the 5/5
     gate and the min(2, factor) = 2 doubling never flip."""
     clock = FakeClock()
@@ -179,7 +173,7 @@ def test_wave_adaptive_grows_chunk_size_too_fast():
         target_time=10, sleep=0,
         time_source=clock, sleep_func=clock.sleep,
     )
-    ConcurrentChunker(bc, max_in_flight=3, wave_adaptive=True).execute()
+    ConcurrentChunker(bc, max_in_flight=3).execute()
     widths = [e - s + 1 for s, e in sorted(calls)]
     assert widths[0] == 10
     assert max(widths) >= 40, widths  # doubled at least twice
@@ -198,7 +192,7 @@ def test_wave_adaptive_grows_chunk_size_too_fast():
 
 def test_wave_adaptive_shrinks_chunk_size_too_slow():
     """3 s chunks against a 1 s target (>3x over) shrink by the full
-    adjust factor — later waves must cut smaller ranges, never below 1."""
+    adjust factor — later ranges are cut smaller, never below 1."""
     clock = FakeClock()
     calls = []
 
@@ -211,7 +205,7 @@ def test_wave_adaptive_shrinks_chunk_size_too_slow():
         target_time=1, sleep=0,
         time_source=clock, sleep_func=clock.sleep,
     )
-    ConcurrentChunker(bc, max_in_flight=2, wave_adaptive=True).execute()
+    ConcurrentChunker(bc, max_in_flight=2).execute()
     widths = [e - s + 1 for s, e in sorted(calls)]
     assert widths[0] == 30
     assert min(widths) < 30, widths
@@ -224,8 +218,8 @@ def test_wave_adaptive_shrinks_chunk_size_too_slow():
 
 
 def test_wave_adaptive_keeps_budget_and_throttle():
-    """max_runtime + sleep semantics carry into the wave path: the budget
-    is re-checked after each throttle sleep and stops mid-wave; the cursor
+    """max_runtime + sleep semantics hold while adapting: the budget is
+    re-checked after each throttle sleep and stops submissions; the cursor
     resumes at the contiguous prefix."""
     clock = FakeClock()
     calls = []
@@ -239,14 +233,14 @@ def test_wave_adaptive_keeps_budget_and_throttle():
         target_time=10, sleep=0.6, max_runtime=1,
         time_source=clock, sleep_func=clock.sleep,
     )
-    ConcurrentChunker(bc, max_in_flight=1, wave_adaptive=True).execute()
+    ConcurrentChunker(bc, max_in_flight=1).execute()
     assert len(calls) == 1
     assert any("maximum run time" in m for m in bc.messages)
     assert bc.min_id == calls[-1][1]
 
 
 def test_wave_adaptive_converges_not_oscillates():
-    """Round-9 review: same-wave runtimes must be attributed to the width
+    """Round-9 review: in-flight runtimes must be attributed to the width
     the chunk was CUT at, not the post-resize chunk_size — without the
     chunk_count normalization this scenario oscillated 1 <-> 200 forever.
     With it, the loop must land on the serial loop's ideal width (100 ids
@@ -263,7 +257,7 @@ def test_wave_adaptive_converges_not_oscillates():
         target_time=2.0, sleep=0,
         time_source=clock, sleep_func=clock.sleep,
     )
-    ConcurrentChunker(bc, max_in_flight=12, wave_adaptive=True).execute()
+    ConcurrentChunker(bc, max_in_flight=12).execute()
     widths = [e - s + 1 for s, e in calls]
     tail = widths[-20:]
     # converged: the tail MEDIAN sits within 25% of the ideal width.
@@ -279,3 +273,59 @@ def test_wave_adaptive_converges_not_oscillates():
     for s, e in calls:
         covered.update(range(s, e + 1))
     assert covered == set(range(1, 20001))
+
+
+def test_callbacks_run_on_the_calling_thread():
+    """Status lines (on_message), workers' retry notices and on_progress
+    all fire on the thread that called execute(), never on a worker. More
+    workers than cores and a short switch interval stress the hand-off."""
+    clock = FakeClock()
+    msg_threads, progress_threads = set(), set()
+    failed = set()
+
+    def work(bc, start, end):
+        if start not in failed:  # every chunk fails once, then succeeds
+            failed.add(start)
+            raise RuntimeError("transient")
+        clock.advance(0.1)
+
+    bc = BatchChunker(
+        coderef=work, min_id=1, max_id=100, chunk_size=10,
+        target_time=0, sleep=0, verbose=True, retry_opts={"max_attempts": 2},
+        time_source=clock, sleep_func=clock.sleep,
+        on_message=lambda m: msg_threads.add(threading.get_ident()),
+        on_progress=lambda d, t: progress_threads.add(threading.get_ident()),
+    )
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ConcurrentChunker(bc, max_in_flight=8).execute()
+    finally:
+        sys.setswitchinterval(interval)
+    assert sum("processed" in m for m in bc.messages) == 10
+    assert sum("Retrying after error" in m for m in bc.messages) == 10
+    assert msg_threads == {threading.get_ident()}
+    assert progress_threads == {threading.get_ident()}
+    assert bc.min_id == 100
+
+
+def test_adaptive_loop_has_no_wave_barrier():
+    """With target_time > 0 a free slot is refilled at once: chunk 3 starts
+    while chunk 1 is still running (a barrier per max_in_flight chunks would
+    hold chunk 3 until chunk 1 finished)."""
+    third_started = threading.Event()
+    waited = []
+
+    def work(bc, start, end):
+        if start == 1:
+            waited.append(third_started.wait(timeout=5))
+        elif start == 21:
+            third_started.set()
+
+    bc = BatchChunker(
+        coderef=work, min_id=1, max_id=40, chunk_size=10,
+        target_time=10, sleep=0, verbose=False,
+    )
+    ConcurrentChunker(bc, max_in_flight=2).execute()
+    assert waited == [True]
+    assert bc.min_id == 40

@@ -119,6 +119,28 @@ def test_single_rows_dispatch(spark):
     assert all(v == i + 100 for i, v in rows)
 
 
+def test_concurrent_single_rows_dispatch(spark):
+    """single_rows under ConcurrentChunker hands the coderef one Row per
+    call, as the serial loop does, not the whole chunk DataFrame."""
+    from pyspark.sql import Row
+
+    from dbix_batchchunker_spark import BatchChunker, ConcurrentChunker
+
+    df = spark.range(0, 25).withColumn("val", F.col("id") + 100)
+    args = []
+    bc = BatchChunker(
+        df=df, id_name="id", coderef=lambda bc, row: args.append(row),
+        single_rows=True, min_id=0, max_id=24,
+        chunk_size=10, target_time=0, sleep=0, min_chunk_percent=0,
+        verbose=False,
+    )
+    ConcurrentChunker(bc, max_in_flight=2).execute()
+    assert all(isinstance(a, Row) for a in args)
+    assert len(args) == 25
+    assert sorted(a["id"] for a in args) == list(range(25))
+    assert all(a["val"] == a["id"] + 100 for a in args)
+
+
 def test_process_past_max_sees_new_data(spark, tmp_path):
     """Grow the backing parquet mid-run: process_past_max must extend max_id
     and process the late rows (BatchChunker.pm:1394-1460 semantics)."""
@@ -285,7 +307,7 @@ def test_concurrent_chunker_rejects_stmt_mode():
 
 
 def test_wave_adaptive_concurrent_chunker_on_dataframe(spark):
-    """Wave-adaptive mode against a REAL DataFrame dispatch: full
+    """Adaptive concurrent mode against a REAL DataFrame dispatch: full
     coverage, a converged chunk_size written back, and the targeting
     messages present — the round-9 adaptivity+throughput integration
     (tests/test_chunker_concurrent.py pins the timing math with a fake
@@ -299,7 +321,7 @@ def test_wave_adaptive_concurrent_chunker_on_dataframe(spark):
         chunk_size=10, target_time=30,  # Spark chunks are far under 30 s
         sleep=0, min_chunk_percent=0, min_id=0, max_id=1999, verbose=True,
     )
-    ConcurrentChunker(bc, max_in_flight=3, wave_adaptive=True).execute()
+    ConcurrentChunker(bc, max_in_flight=3).execute()
     assert sum(counts) == 2000
     assert bc.min_id == 1999
     # fast chunks against a 30 s target must have grown the size

@@ -60,3 +60,6 @@ def test_target_time_zero_default_chunk_size_warns():
 def test_probe_mode_validated():
     with pytest.raises(ValueError, match="probe_mode"):
         BatchChunker(coderef=noop, probe_mode="nope")
+    # "off" is gone: leaving out a count source already disables probing
+    with pytest.raises(ValueError, match="probe_mode"):
+        BatchChunker(coderef=noop, probe_mode="off")

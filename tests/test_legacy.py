@@ -47,7 +47,6 @@ def test_active_mode_legacy_sth_with_sleep(db):
             target_time=0,
             sleep=0.1,
             verbose=False,
-            probe_mode="off",
             min_chunk_percent=0,
             time_source=clock,
             sleep_func=clock.sleep,

@@ -125,7 +125,7 @@ def test_chunker_locale_attr_reaches_status_lines():
     bc = BatchChunker(
         coderef=lambda bc, s, e: None, min_id=0, max_id=2999,
         chunk_size=1500, target_time=0, sleep=0, verbose=True,
-        locale="de", probe_mode="off",
+        locale="de",
     )
     bc.execute()
     # de decimal comma in runtimes, de grouping dot in the totals header
