@@ -12,10 +12,12 @@ Spark mapping (SURVEY.md §1.4 / §3.4):
   (partition pruning + parquet predicate pushdown make this a cheap range
   scan, not a full pass), or a JDBC pushdown predicate.
 * min/max range scan          → one ``agg(F.min(id), F.max(id))`` job.
-* COUNT probe                 → per-chunk ``count()`` job, or — the
-  Spark-first path — a one-pass **id histogram** (single groupBy job whose
-  per-stride counts are consulted driver-side, amortizing the ~100 ms
-  job-launch cost of per-chunk probes across the whole run).
+* COUNT probe                 → an exact snapshot: an **id-count index**
+  over a window of ≤ ``histogram_max_buckets`` ids (one groupBy job, taken
+  at the first probe of each ``execute()`` and again each time the cursor
+  passes the window) answers probes driver-side, instead of a ~100 ms
+  ``count()`` job per chunk. A ``df_fn`` source keeps per-probe live
+  ``count()`` jobs.
 * single_rows                 → ``toLocalIterator()`` over the chunk, with
   chunk-level replay on failure (Spark has no multi-row transactions; the
   reference already demands idempotent work, BatchChunker.pm:109-112).
@@ -53,6 +55,8 @@ import time
 import warnings
 from typing import Any, Callable, Dict, Iterator, Optional, Sequence, Tuple
 
+import numpy as np
+
 from .loop_state import LoopState, Timing
 from .retry import run_with_retry
 
@@ -79,7 +83,7 @@ _KNOWN_ATTRS = {
     "min_chunk_percent", "process_past_max",
     "min_id", "max_id",
     # probes
-    "probe_mode", "histogram_max_buckets",
+    "histogram_max_buckets",
     # retry
     "retry_opts",
     # reporting / testability
@@ -94,6 +98,11 @@ class BatchChunker:
     Constructor is strict (unknown attributes raise ``TypeError``, mirroring
     the reference's MooX::StrictConstructor; t/construct.t:118-128) and
     validates mode requirements up front (BatchChunker.pm:913-929).
+
+    COUNT probes over a static ``df`` or ``count_df`` are an exact snapshot
+    taken when the probe's index window is built, even when the frame reads
+    a live database (``spark.read.jdbc``, ``spark.table``). Pass ``df_fn``
+    to COUNT the live source at every probe.
     """
 
     def __init__(self, **kwargs: Any) -> None:
@@ -156,18 +165,13 @@ class BatchChunker:
         self.min_id: Optional[int] = _opt_int(kwargs.get("min_id"))
         self.max_id: Optional[int] = _opt_int(kwargs.get("max_id"))
 
-        # --- probe strategy -------------------------------------------------
-        # 'count'     → per-chunk count job (reference behavior, A3)
-        # 'histogram' → one-pass per-stride counts consulted driver-side
+        # --- COUNT probes ----------------------------------------------------
+        # Probes read an exact id-count index over a window of at most
+        # histogram_max_buckets ids (_probe_count), rebuilt as the cursor
+        # passes it and dropped when execute() starts and exits.
         # No count source (count_df=False, no count_stmt) → never probe.
-        self.probe_mode: str = kwargs.get("probe_mode", "count")
-        if self.probe_mode not in ("count", "histogram"):
-            raise ValueError(f"probe_mode must be count|histogram, got {self.probe_mode!r}")
         self.histogram_max_buckets: int = int(kwargs.get("histogram_max_buckets", 1 << 20))
-        self._histogram: Optional[Dict[int, int]] = None
-        self._histogram_stride: Optional[int] = None
-        self._histogram_base: Optional[int] = None  # min_id at build time;
-        # execute() rewrites min_id for resume, so buckets must not track it
+        self._index: Optional[Tuple[int, int, Any, Any]] = None
 
         # --- retry -----------------------------------------------------------
         # Reference: BlockRunner defaults max_attempts=10 + always-retry handler
@@ -311,6 +315,7 @@ class BatchChunker:
 
         ls = LoopState(chunk_size=self.chunk_size, time_source=self.time_source)
         self._ls = ls
+        self._index = None  # index only what remains from the cursor
 
         while (
             ls.prev_end is None  # first chunk
@@ -353,7 +358,7 @@ class BatchChunker:
         # cursor write-back for resumability (BatchChunker.pm:1228)
         if ls.prev_end is not None:
             self.min_id = ls.prev_end
-        self._ls = None
+        self._ls = self._index = None
 
     def chunk_ranges(self) -> Iterator[Tuple[int, int]]:
         """Static (non-adaptive) ranges covering [min_id, max_id].
@@ -446,7 +451,7 @@ class BatchChunker:
                     self.count_stmt, extra_binds=(ls.start, ls.end)
                 )
                 chunk_count = int(chunk_count or 0)
-            elif self._current_count_df() is not None:
+            elif self.count_df is not None:
                 chunk_count = self._probe_count(ls.start, ls.end)
         ls.chunk_count = chunk_count
 
@@ -466,29 +471,20 @@ class BatchChunker:
         """The base DataFrame — re-resolved through df_fn for live sources."""
         return self.df_fn() if self.df_fn is not None else self.df
 
+    def _count_is_live(self) -> bool:
+        """Whether probes COUNT a live source: ``df_fn`` with the default
+        count source."""
+        return self._count_is_default and self.df_fn is not None
+
     def _current_count_df(self) -> Optional[DataFrame]:
-        if self._count_is_default and self.df_fn is not None:
-            return self.df_fn()
-        return self.count_df
+        return self.df_fn() if self._count_is_live() else self.count_df
 
-    def _between(self, df: DataFrame, start: int, end: int) -> DataFrame:
-        """``df`` restricted to ids in ``[start, end]`` — the chunk frame
-        (the reference injects ``-between`` into the ResultSet,
-        BatchChunker.pm:1279-1286, 1352-1374).
-
-        Cursor math is arbitrary-precision Python int (the reference's
-        41-digit-id case, t/big-id.t); bounds beyond int64 cross py4j as
-        Decimal — DecimalType(38,0) columns compare fine, which caps
-        *column* ids at 38 digits (cursor math itself is unbounded)."""
-
-        def lit(v: int):
-            if -(2**63) <= v < 2**63:
-                return F.lit(v)
-            import decimal
-
-            return F.lit(decimal.Decimal(v))
-
-        return df.filter(F.col(self.id_name).between(lit(start), lit(end)))
+    def _between(self, start: int, end: int):
+        """The filter ``id BETWEEN start AND end`` — the chunk frame is
+        ``df.filter(self._between(start, end))`` (the reference injects
+        ``-between`` into the ResultSet, BatchChunker.pm:1279-1286,
+        1352-1374)."""
+        return F.col(self.id_name).between(_id_lit(start), _id_lit(end))
 
     def _dispatch_dataframe(
         self,
@@ -502,7 +498,7 @@ class BatchChunker:
         ``single_rows`` ``coderef(bc, row)`` per Row through
         ``toLocalIterator``. ``on_attempt`` runs at the start of every
         attempt (the serial loop resets its chunk timer there)."""
-        chunk_df = self._between(self._current_df(), start, end)
+        chunk_df = self._current_df().filter(self._between(start, end))
 
         def work() -> None:
             on_attempt()
@@ -541,62 +537,50 @@ class BatchChunker:
             self._dbapi_run(work)
 
     # ------------------------------------------------------------------ #
-    # COUNT probes: per-chunk job or one-pass histogram                   #
+    # COUNT probes: exact id-count index windows                         #
     # ------------------------------------------------------------------ #
 
     def _probe_count(self, start: int, end: int) -> int:
-        if self.probe_mode == "histogram":
-            return self._histogram_count(start, end)
-        return int(
-            self._retry(
-                lambda: self._between(self._current_count_df(), start, end).count()
-            )
+        """Exact count of count-source rows with ids in ``[start, end]``.
+
+        On an indexed RDBMS the reference's COUNT is nearly free; on Spark
+        each is a job launch. So a probe builds an id-count index over a
+        window of up to ``histogram_max_buckets`` ids from its start, cut
+        at ``max_id`` (``_build_index``), and every later probe inside that
+        window is a difference of two ``searchsorted`` lookups; a probe
+        past it rebuilds the window from its own start. A probe wider than
+        half a window, or on a live source (``df_fn`` with the default
+        count source), is one COUNT job as before, so no run submits more
+        probe jobs than one COUNT per probe would."""
+        width = self.histogram_max_buckets
+        if self._count_is_live() or 2 * (end - start + 1) > width:
+            return int(self._retry(
+                lambda: self._current_count_df().filter(self._between(start, end)).count()
+            ))
+        if self._index is None or not self._index[0] <= start <= end <= self._index[1]:
+            last = end if self.max_id is None else max(end, self.max_id)
+            hi = min(start + width - 1, last)
+            self._index = self._build_index(start, hi)
+            if self._ls is not None:
+                self._ls.mark_chunk_timer()  # the build is not the COUNT's cost
+        lo, _, keys, cum = self._index
+        a, b = np.searchsorted(keys, [start - lo, end - lo + 1])
+        return int(cum[b] - cum[a])
+
+    def _build_index(self, lo: int, hi: int) -> Tuple[int, int, Any, Any]:
+        """One groupBy job: the count source's rows per id ``lo + key`` for
+        ids in ``[lo, hi]``. Returns ``(lo, hi, keys, cum)``: sorted int64
+        keys and cumulative counts, ``cum[0] == 0``."""
+        key = (F.col(self.id_name) - _id_lit(lo)).cast("long")
+        # bounded: at most histogram_max_buckets rows, one per id in [lo, hi]
+        tbl = self._retry(
+            lambda: self._current_count_df().filter(self._between(lo, hi))
+            .groupBy(key.alias("k")).count().toArrow()
         )
-
-    def _build_histogram(self) -> None:
-        """One groupBy job: per-stride row counts over the whole key range.
-
-        At 100 TB this replaces O(chunks) count jobs with ONE shuffle whose
-        output (≤ histogram_max_buckets longs) is collected to the driver.
-        Edge buckets of a probed range are prorated, which is fine: the
-        counts only drive resize *heuristics*, never correctness.
-        """
-        assert self.min_id is not None and self.max_id is not None
-        span = self.max_id - self.min_id + 1
-        stride = max(1, self.chunk_size)
-        if span // stride > self.histogram_max_buckets:
-            stride = math.ceil(span / self.histogram_max_buckets)
-        base = self.min_id
-        bucket = ((F.col(self.id_name) - F.lit(base)) / F.lit(stride)).cast("long")
-        # bounded: one row per stride bucket (range/stride), not per id
-        rows = (
-            self._current_count_df()
-            .groupBy(bucket.alias("__bucket"))
-            .count()
-            .collect()
-        )
-        self._histogram = {r["__bucket"]: r["count"] for r in rows}
-        self._histogram_stride = stride
-        self._histogram_base = base
-
-    def _histogram_count(self, start: int, end: int) -> int:
-        if self._histogram is None:
-            self._build_histogram()
-        assert self._histogram is not None and self._histogram_stride is not None
-        base = self._histogram_base
-        w = self._histogram_stride
-        lo_b = (start - base) // w
-        hi_b = (end - base) // w
-        total = 0.0
-        for b in range(lo_b, hi_b + 1):
-            cnt = self._histogram.get(b, 0)
-            if not cnt:
-                continue
-            b_lo = base + b * w
-            b_hi = b_lo + w - 1
-            overlap = min(end, b_hi) - max(start, b_lo) + 1
-            total += cnt * (overlap / w)
-        return int(round(total))
+        keys = tbl.column("k").to_numpy()
+        order = np.argsort(keys)
+        counts = tbl.column("count").to_numpy()[order]
+        return lo, hi, keys[order], np.concatenate(([0], np.cumsum(counts)))
 
     # ------------------------------------------------------------------ #
     # chunk count checker (A4; BatchChunker.pm:1475-1570)                 #
@@ -857,6 +841,18 @@ class BatchChunker:
 
 def _opt_int(v: Any) -> Optional[int]:
     return None if v is None else int(v)
+
+
+def _id_lit(v: int):
+    """An id literal. Cursor math is arbitrary-precision Python int (the
+    reference's 41-digit-id case, t/big-id.t); values beyond int64 cross
+    py4j as Decimal — DecimalType(38,0) columns compare fine, which caps
+    *column* ids at 38 digits (cursor math itself is unbounded)."""
+    if -(2**63) <= v < 2**63:
+        return F.lit(v)
+    import decimal
+
+    return F.lit(decimal.Decimal(v))
 
 
 # --------------------------------------------------------------------------- #

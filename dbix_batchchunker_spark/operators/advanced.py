@@ -2109,8 +2109,8 @@ def ranges_from_islands(
     tables, but O(keys) for adversarially sparse ones (every other id
     missing), so the transfer is GATED at ``max_islands`` and refuses
     its cliff (round-9 review #2): a gap-dominated table should use
-    ``BatchChunker``'s fixed ranges + histogram probe mode instead,
-    which skip empty chunks for one aggregate pass."""
+    ``BatchChunker``'s default COUNT probe instead, which skips empty
+    chunks from one id-count index job."""
     islands = id_islands(keys, id_name)
     # bounded: max_islands rows — the fail-fast gate IS the bound
     head = islands.limit(max_islands + 1).collect()
@@ -2118,9 +2118,9 @@ def ranges_from_islands(
         raise ValueError(
             f"ranges_from_islands: more than {max_islands} islands — the "
             f"id space is gap-dominated, so island-wise planning would "
-            f"materialize O(keys) driver state. Use BatchChunker's fixed "
-            f"chunk_ranges with probe_mode='histogram' (empty chunks are "
-            f"skipped from one aggregate pass) for this table."
+            f"materialize O(keys) driver state. Use BatchChunker's default "
+            f"COUNT probe (empty chunks are skipped from one id-count index "
+            f"job) for this table."
         )
     out: "list[tuple[int, int]]" = []
     for r in head:

@@ -144,8 +144,12 @@ def chunker_from_jdbc(
         id_name = pk[0]
     from ..chunker import BatchChunker
 
-    df = spark.read.jdbc(url=url, table=table, properties=properties or {})
-    return BatchChunker(df=df, id_name=id_name, **chunker_kwargs)
+    # a live source: each probe COUNTs the table as it is then
+    return BatchChunker(
+        df_fn=lambda: spark.read.jdbc(url=url, table=table, properties=properties or {}),
+        id_name=id_name,
+        **chunker_kwargs,
+    )
 
 
 def read_chunked(

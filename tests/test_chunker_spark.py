@@ -1,10 +1,12 @@
 """BatchChunker over real Spark DataFrames: DataFrame dispatch (A10 analog),
-COUNT probes + resize on gappy keys, histogram probe mode, single_rows,
-process_past_max against a growing parquet directory."""
+COUNT probes + resize on gappy keys, the exact id-count index behind the
+probes, single_rows, process_past_max against a growing parquet directory."""
 
 from __future__ import annotations
 
 import os
+import random
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,12 +62,15 @@ def test_count_probe_skips_empty_ranges(spark, gappy):
     assert any("skipped" in m for m in bc.messages)
 
 
-def test_histogram_probe_mode_single_count_job(spark, gappy):
+def test_histogram_probe_mode_single_count_job(spark, gappy, monkeypatch):
+    """Every COUNT probe of a run is answered from the one id-count index
+    job: the only count() calls are the coderef's own."""
     from dbix_batchchunker_spark import BatchChunker
 
+    counts = _count_calls(monkeypatch, gappy)
     processed = []
     bc = BatchChunker(
-        df=gappy, id_name="id", probe_mode="histogram",
+        df=gappy, id_name="id",
         coderef=lambda bc, cdf: processed.append(cdf.count()),
         chunk_size=50, target_time=0, sleep=0, min_chunk_percent=0.5,
         verbose=False,
@@ -73,17 +78,18 @@ def test_histogram_probe_mode_single_count_job(spark, gappy):
     bc.calculate_ranges()
     bc.execute()
     assert sum(processed) == 150
-    assert bc._histogram is not None
-    # histogram counts must agree with reality on aligned buckets
-    assert bc._histogram_count(0, 49) == 50
-    assert bc._histogram_count(100, 449) == 0
+    assert counts[0] == len(processed)
+    # index counts must agree with reality
+    assert bc._probe_count(0, 49) == 50
+    assert bc._probe_count(100, 449) == 0
 
 
 def test_histogram_probe_rebuilds_from_live_source(spark, tmp_path):
-    """The one-pass histogram must be built from the LIVE source under df_fn
-    (round-6 verdict 'What's wrong' #3: it read the pinned construction-time
-    snapshot, so a growing table's histogram went stale). Grow the table
-    between construction and the probe: the histogram must see the new rows."""
+    """A live source under df_fn is COUNTed live at every probe (round-6
+    verdict 'What's wrong' #3: the one-pass histogram read the pinned
+    construction-time snapshot, so a growing table's counts went stale).
+    Grow the table between construction and the probe: the probe must see
+    the new rows."""
     from dbix_batchchunker_spark import BatchChunker
 
     path = str(tmp_path / "grow_hist")
@@ -93,14 +99,163 @@ def test_histogram_probe_rebuilds_from_live_source(spark, tmp_path):
         df_fn=lambda: spark.read.parquet(path),
         id_name="id", coderef=lambda bc, cdf: None,
         chunk_size=25, target_time=0, sleep=0, min_chunk_percent=0,
-        probe_mode="histogram", verbose=False,
+        verbose=False,
     )
     bc.calculate_ranges()
     # concurrent writer fills in more rows INSIDE the known range
     spark.range(50, 100).write.mode("append").parquet(path)
-    # widen the range manually so the histogram spans the appended ids
+    # widen the range manually so the probe spans the appended ids
     bc.max_id = 99
-    assert bc._histogram_count(0, 99) == 100  # stale snapshot would say 50
+    assert bc._probe_count(0, 99) == 100  # stale snapshot would say 50
+
+
+def _count_calls(monkeypatch, df) -> list:
+    """Count DataFrame.count() calls from here on."""
+    calls = [0]
+    cls = type(df)
+    real = cls.count
+
+    def counting(self):
+        calls[0] += 1
+        return real(self)
+
+    monkeypatch.setattr(cls, "count", counting)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "max_buckets, decimal_ids",
+    [(1 << 20, False), (97, False), (7, False), (97, True)],
+    ids=["default", "97", "7", "decimal-97"],
+)
+def test_probe_count_is_exact(spark, max_buckets, decimal_ids):
+    """Probes equal a brute-force count, whatever the index window: inside
+    [min_id, max_id], straddling it and beyond max_id (where
+    process_past_max would raise it), with a 300-row hot id — from the
+    index when a range fits half a window, else from one COUNT job."""
+    from pyspark.sql import types as T
+
+    from dbix_batchchunker_spark import BatchChunker
+
+    rng = random.Random(max_buckets)
+    ids = list(range(0, 200)) + [1500] * 300 + list(range(5000, 5011))
+    ids += [i for i in range(1000, 3000) if rng.random() < 0.1]
+    off = 10**20 if decimal_ids else 0
+    if decimal_ids:
+        schema = T.StructType([T.StructField("id", T.DecimalType(38, 0))])
+        df = spark.createDataFrame([(Decimal(off + i),) for i in ids], schema)
+    else:
+        df = spark.createDataFrame([(i,) for i in ids], "id long")
+    df = df.cache()
+    bc = BatchChunker(
+        df=df, id_name="id", coderef=lambda bc, cdf: None,
+        min_id=off + 100, max_id=off + 3000, histogram_max_buckets=max_buckets,
+        chunk_size=10, target_time=0, sleep=0, verbose=False,
+    )
+    half = min(400, max_buckets // 2)
+    ranges = [(1500, 1500), (0, 6000), (3001, 3001), (1499, 1498 + half)]
+    for _ in range(3):
+        s = rng.randint(100, 3000)
+        ranges.append((s, min(3000, s + rng.randint(0, 400))))  # inside
+        ranges.append(rng.choice([(rng.randint(0, 150), rng.randint(100, 400)),
+                                  (rng.randint(2800, 3000), rng.randint(3000, 5200))]))
+        s = rng.randint(3001, 5100)
+        ranges.append((s, s + rng.randint(0, 300)))  # beyond max_id
+        s = rng.randint(0, 5100)
+        ranges.append((s, s + rng.randint(0, half - 1)))  # one index window
+    try:
+        for s, e in ranges:
+            want = sum(1 for i in ids if s <= i <= e)
+            assert bc._probe_count(off + s, off + e) == want, (s, e)
+    finally:
+        df.unpersist()
+
+
+def _hot_gappy(spark):
+    """ids 0-99 and 500-549, plus 40 rows of the hot id 300."""
+    return (
+        spark.range(0, 100)
+        .union(spark.range(500, 550))
+        .union(spark.range(0, 40).select(F.lit(300).cast("long").alias("id")))
+    )
+
+
+@pytest.mark.parametrize("max_buckets", [1 << 20, 64], ids=["default", "64"])
+def test_static_and_live_sources_decide_alike(spark, monkeypatch, max_buckets):
+    """The index changes when the ladder pays for its counts, not what it
+    decides: with a frozen clock, a static df and a live df_fn over the
+    same table print the same messages. Static probes submit no more jobs
+    than one COUNT per probe — none at all when one window spans the
+    table; with a 64-id window over 550 ids the windows are rebuilt as the
+    cursor passes them, and chunks wider than 32 ids are COUNTed."""
+    from dbix_batchchunker_spark import BatchChunker
+
+    df = _hot_gappy(spark)
+    counts = _count_calls(monkeypatch, df)
+    probes, builds = [0], [0]
+    real_probe, real_build = BatchChunker._probe_count, BatchChunker._build_index
+
+    def probe(self, *a):
+        probes[0] += 1
+        return real_probe(self, *a)
+
+    def build(self, *a):
+        builds[0] += 1
+        return real_build(self, *a)
+
+    monkeypatch.setattr(BatchChunker, "_probe_count", probe)
+    monkeypatch.setattr(BatchChunker, "_build_index", build)
+
+    def run(**src):
+        bc = BatchChunker(
+            **src, id_name="id", coderef=lambda bc, cdf: None,
+            chunk_size=20, target_time=5, sleep=0, min_chunk_percent=0.5,
+            time_source=lambda: 0.0, verbose=True,
+            histogram_max_buckets=max_buckets,
+        )
+        bc.calculate_ranges()
+        bc.execute()
+        return bc.messages
+
+    static = run(df=df)
+    assert builds[0] + counts[0] <= probes[0]
+    if max_buckets > 550:
+        assert (builds[0], counts[0]) == (1, 0)
+    else:
+        assert builds[0] > 1 and counts[0] > 0
+    counts[0] = 0
+    live = run(df_fn=lambda: df)
+    assert counts[0] > 0
+    assert static == live
+    assert any("single ID with many rows" in m for m in static)
+    assert any("skipped" in m for m in static)
+
+
+def test_index_build_is_not_a_slow_count(spark, monkeypatch):
+    """Building the index at the first probe is not the COUNT's cost: a
+    build slower than target_time must not shrink the first chunk as a
+    'COUNT statement was too slow'."""
+    from dbix_batchchunker_spark import BatchChunker
+
+    now = [0.0]
+    real = BatchChunker._build_index
+
+    def slow_build(self, *a):
+        out = real(self, *a)
+        now[0] += 2 * self.target_time
+        return out
+
+    monkeypatch.setattr(BatchChunker, "_build_index", slow_build)
+    bc = BatchChunker(
+        df=spark.range(0, 100), id_name="id", coderef=lambda bc, cdf: None,
+        chunk_size=10, target_time=1, sleep=0, min_chunk_percent=0.5,
+        time_source=lambda: now[0], verbose=True,
+    )
+    bc.calculate_ranges()
+    bc.execute()
+    assert not any("too slow" in m for m in bc.messages)
+    first = next(m for m in bc.messages if m.startswith("IDs"))
+    assert "processed" in first, first
 
 
 def test_single_rows_dispatch(spark):

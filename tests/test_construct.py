@@ -58,8 +58,8 @@ def test_target_time_zero_default_chunk_size_warns():
 
 
 def test_probe_mode_validated():
-    with pytest.raises(ValueError, match="probe_mode"):
-        BatchChunker(coderef=noop, probe_mode="nope")
-    # "off" is gone: leaving out a count source already disables probing
-    with pytest.raises(ValueError, match="probe_mode"):
-        BatchChunker(coderef=noop, probe_mode="off")
+    # probe_mode is gone: every DataFrame probe reads one exact id-count
+    # index, and leaving out a count source disables probing
+    for mode in ("nope", "off", "count", "histogram"):
+        with pytest.raises(TypeError, match="unknown attribute.*probe_mode"):
+            BatchChunker(coderef=noop, probe_mode=mode)

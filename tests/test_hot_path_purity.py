@@ -39,15 +39,15 @@ def test_no_rdd_map_on_row_path():
 
 
 def test_collect_calls_are_all_annotated_bounded():
-    """Every executor→driver materialization (.collect() / .toPandas())
-    in the package must sit within 8 lines of a comment explaining its
-    bound — the 'no unbounded driver materialization' rule made
-    mechanical. (toLocalIterator is exempt: it streams.)"""
+    """Every executor→driver materialization (.collect() / .toPandas() /
+    .toArrow()) in the package must sit within 8 lines of a comment
+    explaining its bound — the 'no unbounded driver materialization' rule
+    made mechanical. (toLocalIterator is exempt: it streams.)"""
     unexplained = []
     for p, src in _sources():
         lines = src.splitlines()
         for i, ln in enumerate(lines):
-            if ".collect()" in ln or ".toPandas()" in ln:
+            if any(m in ln for m in (".collect()", ".toPandas()", ".toArrow()")):
                 ctx = "\n".join(lines[max(0, i - 8) : i + 1])
                 if not re.search(
                     r"(?i)#.*(bound|tiny|small|one row per|driver|partitions,"
