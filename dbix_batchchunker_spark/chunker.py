@@ -50,6 +50,8 @@ declarative Spark job that Catalyst optimizes independently.
 
 from __future__ import annotations
 
+import collections
+import concurrent.futures as cf
 import math
 import time
 import warnings
@@ -297,13 +299,27 @@ class BatchChunker:
     # ------------------------------------------------------------------ #
 
     def execute(self) -> None:
-        if self.min_id is None or self.max_id is None:
+        self._run(1)
+
+    def _run(self, max_in_flight: int) -> None:
+        """The chunk loop, with up to ``max_in_flight`` chunks in flight
+        (``execute`` runs one; :class:`ConcurrentChunker` more).
+
+        The calling thread cuts each chunk, checks ``max_runtime`` and
+        ``process_past_max``, probes its COUNT and walks the resize ladder,
+        then dispatches it: inline with one in flight, else on a thread
+        pool. Dispatched and skipped chunks queue in cut order and drain
+        along the contiguous completed prefix, on the calling thread: per
+        processed chunk the loop sleeps, prints the status line, fires
+        ``on_progress`` and feeds the runtime targeting. On exit, an error
+        included, ``min_id`` is the end of the drained prefix and
+        ``chunk_size`` the adapted size, so a re-run resumes without
+        skipping an unfinished chunk.
+        """
+        if self.min_id is None or self.max_id is None or self.max_id < self.min_id:
             self._message("No chunks; nothing to process...")
             return
         total = self.max_id - self.min_id + 1
-        if total <= 0:
-            self._message("No chunks; nothing to process...")
-            return
 
         if self.verbose:
             from .progress import format_int
@@ -316,49 +332,75 @@ class BatchChunker:
         ls = LoopState(chunk_size=self.chunk_size, time_source=self.time_source)
         self._ls = ls
         self._index = None  # index only what remains from the cursor
+        queue: collections.deque = collections.deque()  # (future, start, end, count, size)
+        notes: collections.deque = collections.deque()  # workers' retry notices
+        inline = max_in_flight == 1
+        drained: Optional[int] = None
 
-        while (
-            ls.prev_end is None  # first chunk
-            or ls.start is not None  # mid chunk-resize
-            or ls.prev_end < self.max_id  # more to go
-        ):
-            ls.multiplier_range += ls.multiplier_step
-            if ls.start is None:
-                ls.start = (
-                    ls.prev_end + 1
-                    if ls.prev_end is not None
-                    else (self.min_id if self.min_id is not None else 1)
-                )
-            ls.end = min(
-                # ceil: multiplier may be fractional mid-bisection
-                ls.start + math.ceil(ls.multiplier_range * ls.chunk_size) - 1,
-                self.max_id,
-            )
-            ls.chunk_count = None
+        def drain(block: bool) -> None:
+            nonlocal drained
+            if block:
+                cf.wait([f for f, *_ in queue if not f.done()], return_when=cf.FIRST_COMPLETED)
+            while notes:
+                self._message(notes.popleft())
+            while queue and queue[0][0].done():
+                fut, start, end, count, size = queue.popleft()
+                runtime = fut.result()  # re-raises the chunk's error
+                if runtime is not None:  # None: a skipped range
+                    if self.sleep:
+                        self.sleep_func(self.sleep)
+                    self._print_chunk_status("processed", start, end, count, size, runtime)
+                drained = end
+                self._increment_progress(end)
+                if runtime is not None:
+                    self._runtime_checker(runtime, count or size)
 
-            if self.max_runtime and self.time_source() - ls.total_timer > self.max_runtime:
-                self._message("Ran past the maximum run time")
-                break
+        try:
+            with _Inline() if inline else cf.ThreadPoolExecutor(max_in_flight) as pool:
+                while (
+                    ls.prev_end is None  # first chunk
+                    or ls.start is not None  # mid chunk-resize
+                    or ls.prev_end < self.max_id  # more to go
+                ):
+                    if any(f.done() and f.exception() for f, *_ in queue):
+                        break  # a failed chunk stops new cuts; it raises once drained
+                    ls.multiplier_range += ls.multiplier_step
+                    if ls.start is None:
+                        ls.start = ls.prev_end + 1 if ls.prev_end is not None else self.min_id
+                    ls.end = min(
+                        # ceil: multiplier may be fractional mid-bisection
+                        ls.start + math.ceil(ls.multiplier_range * ls.chunk_size) - 1,
+                        self.max_id,
+                    )
+                    ls.chunk_count = None
 
-            if not self._process_past_max_checker():
-                continue
-            if not self._process_block():
-                continue
+                    if self.max_runtime and self.time_source() - ls.total_timer > self.max_runtime:
+                        self._message("Ran past the maximum run time")
+                        break
 
-            ls.prev_runtime = self.time_source() - ls.chunk_timer
-
-            if self.sleep:
-                self.sleep_func(self.sleep)
-
-            self._print_chunk_status("processed")
-            self._increment_progress()
-            self._runtime_checker()
-            ls.reset_chunk_state()
-
-        # cursor write-back for resumability (BatchChunker.pm:1228)
-        if ls.prev_end is not None:
-            self.min_id = ls.prev_end
-        self._ls = self._index = None
+                    if not self._process_past_max_checker():
+                        continue
+                    if self._probe_and_check():
+                        fut = pool.submit(
+                            self._dispatch, ls.start, ls.end, None if inline else notes.append
+                        )
+                    elif ls.prev_check == "skipped rows":
+                        fut = _SKIPPED
+                    else:
+                        continue  # resized: cut again
+                    queue.append((fut, *ls.chunk))
+                    drain(sum(not f.done() for f, *_ in queue) >= max_in_flight)
+                    ls.reset_chunk_state(skipped=fut is _SKIPPED)
+                while queue:
+                    drain(True)
+        finally:
+            while notes:
+                self._message(notes.popleft())
+            # cursor write-back for resumability (BatchChunker.pm:1228)
+            if drained is not None:
+                self.min_id = drained
+            self.chunk_size = ls.chunk_size
+            self._ls = self._index = None
 
     def chunk_ranges(self) -> Iterator[Tuple[int, int]]:
         """Static (non-adaptive) ranges covering [min_id, max_id].
@@ -434,7 +476,9 @@ class BatchChunker:
     # block processing & dispatch (A3, A8-A11; BatchChunker.pm:1247-1385) #
     # ------------------------------------------------------------------ #
 
-    def _process_block(self) -> bool:
+    def _probe_and_check(self) -> bool:
+        """COUNT-probe the current cut and run the resize ladder on it;
+        True when the cut is to be dispatched."""
         ls = self._ls
         assert ls is not None
 
@@ -455,17 +499,7 @@ class BatchChunker:
                 chunk_count = self._probe_count(ls.start, ls.end)
         ls.chunk_count = chunk_count
 
-        if not self._chunk_count_checker():
-            return False
-
-        # Dispatch
-        if self.stmt is not None:
-            self._dispatch_dbapi(ls.start, ls.end)
-        elif self.df is not None:
-            self._dispatch_dataframe(ls.start, ls.end, ls.mark_chunk_timer)
-        else:
-            self.coderef(self, ls.start, ls.end)
-        return True
+        return self._chunk_count_checker()
 
     def _current_df(self) -> Optional[DataFrame]:
         """The base DataFrame — re-resolved through df_fn for live sources."""
@@ -486,39 +520,48 @@ class BatchChunker:
         1352-1374)."""
         return F.col(self.id_name).between(_id_lit(start), _id_lit(end))
 
-    def _dispatch_dataframe(
-        self,
-        start: int,
-        end: int,
-        on_attempt: Callable[[], None] = lambda: None,
-        message: Optional[Callable[[str], None]] = None,
-    ) -> None:
-        """DataFrame-mode dispatch of one chunk under ``_retry``, shared by
-        the serial and concurrent loops: ``coderef(bc, chunk_df)``, or with
-        ``single_rows`` ``coderef(bc, row)`` per Row through
-        ``toLocalIterator``. ``on_attempt`` runs at the start of every
-        attempt (the serial loop resets its chunk timer there)."""
-        chunk_df = self._current_df().filter(self._between(start, end))
+    def _dispatch(
+        self, start: int, end: int, message: Optional[Callable[[str], None]] = None
+    ) -> float:
+        """Run chunk ``[start, end]`` in its dispatch mode under ``_retry``
+        (retry notices go to ``message``) and return the duration of its
+        last attempt. DataFrame mode calls ``coderef(bc, chunk_df)``, or
+        with ``single_rows`` ``coderef(bc, row)`` per Row through
+        ``toLocalIterator``; DIY mode calls ``coderef(bc, start, end)``."""
+        t0 = 0.0
+
+        def begin() -> None:
+            nonlocal t0
+            t0 = self.time_source()
+
+        if self.stmt is not None:
+            self._dispatch_dbapi(start, end, begin)
+            return self.time_source() - t0
+        chunk_df = None if self.df is None else self._current_df().filter(self._between(start, end))
 
         def work() -> None:
-            on_attempt()
-            if self.single_rows:
+            begin()
+            if chunk_df is None:
+                self.coderef(self, start, end)
+            elif self.single_rows:
                 for row in chunk_df.toLocalIterator():
                     self.coderef(self, row)
             else:
                 self.coderef(self, chunk_df)
 
         self._retry(work, message)
+        return self.time_source() - t0
 
-    def _dispatch_dbapi(self, start: int, end: int) -> None:
-        """Active/Query DBAPI dispatch (BatchChunker.pm:1297-1350)."""
+    def _dispatch_dbapi(self, start: int, end: int, begin: Callable[[], None]) -> None:
+        """Active/Query DBAPI dispatch (BatchChunker.pm:1297-1350);
+        ``begin`` starts each attempt's clock."""
         sql, binds = self.stmt
         execute_args = (*binds, start, end)
 
         if self.single_rows and self.coderef is not None:
             # Transactional per-row work
             def work(conn: Any) -> None:
-                self._ls.mark_chunk_timer()
+                begin()
                 cur = conn.cursor()
                 cur.execute(sql, execute_args)
                 cols = [d[0].lower() for d in cur.description]
@@ -528,7 +571,7 @@ class BatchChunker:
             self._dbapi_txn(work)
         else:
             def work(conn: Any) -> None:
-                self._ls.mark_chunk_timer()
+                begin()
                 cur = conn.cursor()
                 cur.execute(sql, execute_args)
                 if self.coderef is not None:
@@ -601,12 +644,8 @@ class BatchChunker:
         ls.checked_count += 1
 
         if ls.chunk_count == 0:
-            # Skip the block entirely and accelerate the stepping
-            self._print_chunk_status("skipped")
-            self._increment_progress()
-            step = ls.multiplier_step
-            ls.reset_chunk_state()
-            ls.multiplier_step = step * 2
+            # Skip the block entirely; the loop accelerates the stepping
+            self._print_chunk_status("skipped", *ls.chunk)
             ls.prev_check = "skipped rows"
             return False
 
@@ -624,7 +663,7 @@ class BatchChunker:
             return True
 
         if chunk_percent > 1 + self.min_chunk_percent:
-            self._print_chunk_status("shrunk")
+            self._print_chunk_status("shrunk", *ls.chunk)
             ls.mark_chunk_timer()
             ls.decrease_multiplier()
             ls.prev_check = "too many rows"
@@ -635,7 +674,7 @@ class BatchChunker:
                 f"WARNING: COUNT statement was too slow; took {count_check_time:.2f} sec "
                 f"to return {ls.chunk_count:,} rows."
             )
-            self._print_chunk_status("shrunk")
+            self._print_chunk_status("shrunk", *ls.chunk)
             ls.mark_chunk_timer()
             ls.decrease_multiplier()
             ls.prev_check = "COUNT too slow"
@@ -652,7 +691,7 @@ class BatchChunker:
             return True
 
         if chunk_percent < self.min_chunk_percent:
-            self._print_chunk_status("expanded")
+            self._print_chunk_status("expanded", *ls.chunk)
             ls.mark_chunk_timer()
             ls.increase_multiplier()
             ls.prev_check = "too few rows"
@@ -665,23 +704,25 @@ class BatchChunker:
     # runtime targeting (A6; BatchChunker.pm:1581-1655)                   #
     # ------------------------------------------------------------------ #
 
-    def _runtime_checker(self) -> Optional[bool]:
+    def _runtime_checker(self, runtime: float, chunk_count: int) -> Optional[bool]:
+        """Feed one processed chunk's ``runtime`` and row count (its probed
+        count, else the ``chunk_size`` it was cut at) to the targeting; it
+        resizes the live ``chunk_size``."""
         if not self.target_time:
             return None
         ls = self._ls
         assert ls is not None
-        if not ls.chunk_size or not ls.prev_runtime:
+        if not ls.chunk_size or not runtime:
             return None
 
-        chunk_count = ls.chunk_count if ls.chunk_count else ls.chunk_size
         chunk_per = chunk_count / ls.chunk_size
         # rowtime: how much of the chunk_size actually impacted the runtime
         ls.push_timing(
             Timing(
-                runtime=ls.prev_runtime,
+                runtime=runtime,
                 chunk_count=chunk_count,
                 chunk_per=chunk_per,
-                rowtime=ls.prev_runtime / chunk_per,
+                rowtime=runtime / chunk_per,
             )
         )
         timings = ls.last_timings
@@ -703,9 +744,9 @@ class BatchChunker:
         elif adjust_factor < 0.95:
             # Too slow: lower chunk size; never less than half unless the
             # last runtime was way (>3×) over
-            if not ls.prev_runtime > self.target_time:
+            if not runtime > self.target_time:
                 return None
-            if ls.prev_runtime < self.target_time * 3:
+            if runtime < self.target_time * 3:
                 new_size *= max(0.5, adjust_factor)
             else:
                 new_size *= adjust_factor
@@ -805,38 +846,58 @@ class BatchChunker:
         if self.on_message is not None:
             self.on_message(msg)
 
-    def _print_chunk_status(self, action: str) -> None:
+    def _print_chunk_status(
+        self,
+        action: str,
+        start: int,
+        end: int,
+        chunk_count: Optional[int],
+        chunk_size: int,
+        runtime: Optional[float] = None,
+    ) -> None:
+        """One chunk's status line; ``runtime`` defaults to the time since
+        the chunk timer (a ladder decision's)."""
         # Reference-uniform status line incl. the ≥1e9 wide-ID compaction
         # (BatchChunker.pm:1676-1745); formatting lives in progress.py.
         if not self.verbose:
             return
         from .progress import chunk_status_line
 
-        ls = self._ls
-        runtime = (
-            ls.prev_runtime
-            if action == "processed"
-            else self.time_source() - ls.chunk_timer
-        )
+        if runtime is None:
+            runtime = self.time_source() - self._ls.chunk_timer
         self._message(
             chunk_status_line(
-                ls.start,
-                ls.end,
+                start,
+                end,
                 action,
-                ls.chunk_count,
-                ls.chunk_size,
+                chunk_count,
+                chunk_size,
                 runtime=runtime,
                 sleep=self.sleep or 0.0,
                 locale=self.locale,
             )
         )
 
-    def _increment_progress(self) -> None:
+    def _increment_progress(self, end: int) -> None:
         if self.on_progress is None or self.min_id is None or self.max_id is None:
             return
-        ls = self._ls
-        done = min(ls.end, self.max_id) - self.min_id + 1
+        done = min(end, self.max_id) - self.min_id + 1
         self.on_progress(done, self.max_id - self.min_id + 1)
+
+
+class _Inline(cf.Executor):
+    """Runs each submission on the calling thread, so a one-in-flight loop
+    keeps sqlite's thread affinity and its coderefs may read ``bc._ls``;
+    an error propagates at once."""
+
+    def submit(self, fn: Callable, /, *args: Any) -> cf.Future:
+        fut: cf.Future = cf.Future()
+        fut.set_result(fn(*args))
+        return fut
+
+
+_SKIPPED: cf.Future = cf.Future()  # a skipped range's queue entry
+_SKIPPED.set_result(None)
 
 
 def _opt_int(v: Any) -> Optional[int]:
@@ -949,25 +1010,21 @@ class ConcurrentChunker:
     cannot offer; keeping several chunk jobs running is what saturates a
     many-executor cluster.
 
-    One rolling scheduler. Each new range is cut at submit time from the
-    live ``LoopState.chunk_size``. Completions are drained in submission
-    order along the contiguous completed prefix, and for each drained chunk
-    the calling thread prints the status line, fires ``on_progress`` and
-    feeds the runtime — attributed to the width the chunk was cut at, as
-    the serial loop's COUNT would — through the unchanged serial runtime
-    targeting (``_runtime_checker``). So the loop adapts whenever
-    ``target_time`` > 0 and never idles at a barrier; with
-    ``target_time=0`` the ranges are static. ``on_message`` and
-    ``on_progress`` fire only on the thread that called :meth:`execute`.
-
-    The serial loop's other guarantees hold: ``sleep`` paces submissions
-    (one ``sleep_func`` call between consecutive submissions),
-    ``max_runtime`` is checked after that sleep and before each submission,
-    and both dispatch modes (DataFrame and DIY) run under ``_retry``. On
-    exit, an error included, ``min_id`` is the end of the contiguous
-    drained prefix and ``chunk_size`` the adapted size, so a re-run resumes
-    without skipping an unfinished chunk. The COUNT probe and resize ladder
-    stay serial-only; work must be idempotent, as in the serial loop.
+    It runs the serial loop itself (``BatchChunker._run``): each chunk is
+    cut, COUNT-probed and resized through the ladder on the calling thread
+    from the live ``LoopState``, exactly as serially, and only its dispatch
+    runs on a worker. Completions drain in submission order along the
+    contiguous completed prefix; for each drained chunk the calling thread
+    sleeps, prints the status line, fires ``on_progress`` and feeds the
+    runtime targeting its probed count (else the ``chunk_size`` it was cut
+    at). So ``on_message`` and ``on_progress`` fire only on the thread that
+    called :meth:`execute`, ``sleep`` paces submissions as it paces the
+    serial loop, and ``max_runtime`` and ``process_past_max`` hold. A
+    failed chunk stops new cuts and raises once drained. On exit, an error
+    included, ``min_id`` is the end of the drained prefix and ``chunk_size``
+    the adapted size, so a re-run resumes without skipping an unfinished
+    chunk; work must be idempotent, as in the serial loop. With
+    ``max_in_flight=1`` the run is the serial loop.
 
     DBAPI stmt mode is rejected at construction: the chunker holds one
     DBAPI connection, which is not thread-safe across workers. Run
@@ -992,77 +1049,4 @@ class ConcurrentChunker:
         self.max_in_flight = max_in_flight
 
     def execute(self) -> None:
-        import collections
-        import concurrent.futures as cf
-
-        bc = self.bc
-        if bc.min_id is None or bc.max_id is None:
-            bc._message("No chunks; nothing to process...")
-            return
-        ls = bc._ls = LoopState(chunk_size=bc.chunk_size, time_source=bc.time_source)
-        queue: collections.deque = collections.deque()  # (future, start, end)
-        notes: collections.deque = collections.deque()  # workers' retry notices
-        next_start, stopped = bc.min_id, False
-
-        def run(start: int, end: int) -> float:
-            t0 = bc.time_source()
-            if bc.df is None:
-                bc._retry(lambda: bc.coderef(bc, start, end), notes.append)
-            else:
-                bc._dispatch_dataframe(start, end, message=notes.append)
-            return bc.time_source() - t0
-
-        def flush_notes() -> None:
-            while notes:
-                bc._message(notes.popleft())
-
-        try:
-            with cf.ThreadPoolExecutor(max_workers=self.max_in_flight) as pool:
-                while True:
-                    pending = [f for f, _, _ in queue if not f.done()]
-                    # a failed chunk stops submissions; it raises once drained
-                    stopped = stopped or any(
-                        f.done() and f.exception() for f, _, _ in queue
-                    )
-                    while (
-                        not stopped
-                        and next_start <= bc.max_id
-                        and len(pending) < self.max_in_flight
-                    ):
-                        if bc.sleep and next_start > bc.min_id:
-                            bc.sleep_func(bc.sleep)
-                        # after the sleep, as the serial loop checks its
-                        # budget at the loop top, after the previous sleep
-                        if (
-                            bc.max_runtime
-                            and bc.time_source() - ls.total_timer > bc.max_runtime
-                        ):
-                            bc._message("Ran past the maximum run time")
-                            stopped = True
-                            break
-                        end = min(next_start + ls.chunk_size - 1, bc.max_id)
-                        fut = pool.submit(run, next_start, end)
-                        pending.append(fut)
-                        queue.append((fut, next_start, end))
-                        next_start = end + 1
-                    if not queue:
-                        break
-                    cf.wait(pending, return_when=cf.FIRST_COMPLETED)
-                    flush_notes()
-                    while queue and queue[0][0].done():
-                        fut, ls.start, ls.end = queue.popleft()
-                        ls.prev_runtime = fut.result()  # re-raises the chunk's error
-                        ls.prev_end, ls.chunk_count = ls.end, None
-                        bc._print_chunk_status("processed")  # unprobed: "?" rows
-                        bc._increment_progress()
-                        # the width this chunk was cut at, not the live
-                        # size a later drain may have changed: feeding the
-                        # live size made the targeting oscillate
-                        ls.chunk_count = ls.end - ls.start + 1
-                        bc._runtime_checker()
-        finally:
-            flush_notes()
-            if ls.prev_end is not None:
-                bc.min_id = ls.prev_end
-            bc.chunk_size = ls.chunk_size
-            bc._ls = None
+        self.bc._run(self.max_in_flight)

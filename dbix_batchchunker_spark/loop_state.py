@@ -58,7 +58,6 @@ class LoopState:
     checked_count: int = 0
     chunk_count: Optional[int] = None
     prev_check: str = ""
-    prev_runtime: Optional[float] = None
 
     last_timings: list = field(default_factory=list)
 
@@ -109,12 +108,19 @@ class LoopState:
         self.last_timings = []
 
     # -- per-block reset (LoopState.pm:311-326) ---------------------------
-    def reset_chunk_state(self) -> None:
+    def reset_chunk_state(self, skipped: bool = False) -> None:
+        """Advance the cursor past the current chunk; after a skipped
+        (empty) one, double the step to cross empty id space faster."""
         self.start = None
         self.prev_end = self.end
         self.mark_chunk_timer()
         self.last_range_min = None
         self.last_range_max = None
         self.multiplier_range = 0.0
-        self.multiplier_step = 1.0
+        self.multiplier_step = self.multiplier_step * 2 if skipped else 1.0
         self.checked_count = 0
+
+    @property
+    def chunk(self) -> tuple:
+        """The current cut: ``(start, end, chunk_count, chunk_size)``."""
+        return self.start, self.end, self.chunk_count, self.chunk_size

@@ -2014,10 +2014,8 @@ def q56_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------- #
 # q57: GAPS-AND-ISLANDS over the order-key space — contiguous id runs via     #
 # the id - ROW_NUMBER() grouping constant (the canonical islands idiom:      #
-# consecutive ids share the difference). Directly load-bearing for THIS     #
-# engine: the chunker's fixed-width ranges probe EMPTY id space on sparse   #
-# tables, and the islands relation is exactly the "where do rows actually   #
-# live" map `ranges_from_islands` (below) feeds back into BatchChunker.     #
+# consecutive ids share the difference): the "where do rows actually live"  #
+# map of a sparse id space, whose gaps the chunk loop's COUNT probe skips.   #
 # One global window — acceptable because the input is the DISTINCT KEY      #
 # column, and at 100 TB the same computation routes through the two-phase   #
 # global rank (functions/prefix.py) exactly like sp06/tx22.                  #
@@ -2085,51 +2083,6 @@ def id_islands(
         .drop("__grp")
         .orderBy("island_start")
     )
-
-
-#: Driver ceiling for the islands transfer: ~24 B/row via Arrow, so 1M
-#: islands is tens of MB — a CONSTANT bound independent of corpus size.
-MAX_DRIVER_ISLANDS = 1_000_000
-
-
-def ranges_from_islands(
-    keys: DataFrame,
-    id_name: str,
-    chunk_size: int,
-    max_islands: int = MAX_DRIVER_ISLANDS,
-) -> "list[tuple[int, int]]":
-    """Chunk ranges that SKIP the id-space gaps: each island is cut into
-    ``chunk_size``-wide ranges independently, so no chunk ever spans (or
-    probes) empty id space — the sparse-table complement of
-    ``BatchChunker.chunk_ranges``. Feed to ``ConcurrentChunker`` via a
-    DIY coderef, or iterate directly.
-
-    Driver materialization is the ISLANDS relation, whose cardinality is
-    the table's GAP STRUCTURE — small for range-deleted/compacted
-    tables, but O(keys) for adversarially sparse ones (every other id
-    missing), so the transfer is GATED at ``max_islands`` and refuses
-    its cliff (round-9 review #2): a gap-dominated table should use
-    ``BatchChunker``'s default COUNT probe instead, which skips empty
-    chunks from one id-count index job."""
-    islands = id_islands(keys, id_name)
-    # bounded: max_islands rows — the fail-fast gate IS the bound
-    head = islands.limit(max_islands + 1).collect()
-    if len(head) > max_islands:
-        raise ValueError(
-            f"ranges_from_islands: more than {max_islands} islands — the "
-            f"id space is gap-dominated, so island-wise planning would "
-            f"materialize O(keys) driver state. Use BatchChunker's default "
-            f"COUNT probe (empty chunks are skipped from one id-count index "
-            f"job) for this table."
-        )
-    out: "list[tuple[int, int]]" = []
-    for r in head:
-        s = r["island_start"]
-        while s <= r["island_end"]:
-            e = min(s + chunk_size - 1, r["island_end"])
-            out.append((s, e))
-            s = e + 1
-    return out
 
 
 # --------------------------------------------------------------------------- #

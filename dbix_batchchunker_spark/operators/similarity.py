@@ -1912,33 +1912,6 @@ def ivf_store(
     return centroids, entries
 
 
-def compact_ivf_store(
-    entries: DataFrame,
-    vectors: DataFrame,
-    deleted_ids: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Store lifecycle (round-7 verdict "Next round #7"): drop deleted
-    vectors from the posting lists and the vector side-table. Posting
-    entries are per-vector, so removal is exact and the CENTROIDS are
-    untouched — compaction changes which vectors exist, not the geometry
-    (round-trip pinned identical to a store rebuilt over the survivors
-    with the same centroids in tests/test_extensions.py). Centroid
-    RE-TRAINING is the separate, drift-driven decision:
-    :func:`ivf_drift_stats` + :func:`ivf_needs_retrain`.
-
-    ``deleted_ids``' first column is the vec id; typically small enough
-    to broadcast, so neither store frame shuffles. At 100 TB run as a
-    partition-overwrite over the centroid_id-partitioned store parquet.
-    """
-    d = deleted_ids.select(
-        F.col(deleted_ids.columns[0]).alias("vec_id")
-    ).distinct()
-    return (
-        entries.join(F.broadcast(d), "vec_id", "left_anti"),
-        vectors.join(F.broadcast(d), "vec_id", "left_anti"),
-    )
-
-
 def ivf_drift_stats(centroids: DataFrame, vectors: DataFrame) -> dict:
     """Health snapshot of an IVF store's geometry against its CURRENT
     vector population: mean cosine of each vector to its best centroid

@@ -53,9 +53,9 @@ def test_concurrent_max_runtime_stops_and_resumes():
 
 
 def test_concurrent_sleep_throttles_submissions():
-    """The throttle paces SUBMISSIONS: one sleep between consecutive chunk
-    starts (n-1 sleeps for n chunks — the serial loop sleeps after each
-    processed chunk; the start-rate is the same, t/dbh.t:89-95 idiom)."""
+    """The throttle paces submissions as it paces the serial loop: one
+    sleep per processed chunk, on the calling thread before the next cut
+    (n sleeps for n chunks, t/dbh.t:89-95 idiom)."""
     clock = FakeClock()
     slept = []
 
@@ -68,7 +68,7 @@ def test_concurrent_sleep_throttles_submissions():
         target_time=0, sleep=0.1, time_source=clock, sleep_func=fake_sleep,
     )
     ConcurrentChunker(bc, max_in_flight=2).execute()
-    assert slept == [0.1] * 4
+    assert slept == [0.1] * 5
     assert bc.min_id == 50
 
 

@@ -1800,7 +1800,7 @@ def test_near_dup_store_compaction_roundtrip(spark):
 
 
 def test_ivf_store_compaction_roundtrip(spark):
-    """compact_ivf_store must equal a store rebuilt over the survivors
+    """compact_embedding_store must equal a store rebuilt over the survivors
     WITH THE SAME centroids (compaction changes population, not geometry):
     identical incremental pairs, and no deleted vector ever surfaces."""
     from dbix_batchchunker_spark.functions.vectors import norm
@@ -1808,7 +1808,7 @@ def test_ivf_store_compaction_roundtrip(spark):
     from dbix_batchchunker_spark.operators.similarity import (
         SIM06_NPROBE,
         _probe_entries,
-        compact_ivf_store,
+        compact_embedding_store,
         incremental_embedding_near_dups,
         ivf_store,
     )
@@ -1821,7 +1821,7 @@ def test_ivf_store_compaction_roundtrip(spark):
 
     centroids, entries = ivf_store(old)
     deleted = old.select("vec_id").limit(20)
-    c_entries, c_vectors = compact_ivf_store(entries, old, deleted)
+    c_entries, c_vectors = compact_embedding_store(entries, old, deleted)
 
     survivors = old.join(deleted, "vec_id", "left_anti")
     r_entries = _probe_entries(survivors, centroids, SIM06_NPROBE).select(
@@ -2436,30 +2436,6 @@ def test_tx28_rule_bits_on_crafted_documents(spark):
     assert set(GOPHER_STOPWORDS) & set(good_words)
 
 
-def test_ranges_from_islands_skip_gaps(spark):
-    """Island-derived chunk ranges must tile exactly the EXISTING ids —
-    no range spans a gap, every id is covered once, and driving them
-    through a DIY chunk loop touches zero empty id space."""
-    from dbix_batchchunker_spark.operators.advanced import (
-        id_islands,
-        ranges_from_islands,
-    )
-
-    ids = [1, 2, 3, 10, 11, 12, 13, 14, 15, 16, 30, 45, 46]
-    keys = spark.createDataFrame([(i,) for i in ids], "id long")
-    islands = [(r.island_start, r.island_end, r.n_ids)
-               for r in id_islands(keys, "id").collect()]
-    assert islands == [(1, 3, 3), (10, 16, 7), (30, 30, 1), (45, 46, 2)]
-
-    ranges = ranges_from_islands(keys, "id", chunk_size=3)
-    assert ranges == [(1, 3), (10, 12), (13, 15), (16, 16),
-                      (30, 30), (45, 46)]
-    covered = set()
-    for s, e in ranges:
-        covered.update(range(s, e + 1))
-    assert covered == set(ids)  # nothing outside the islands
-
-
 def test_id_islands_two_phase_tier_equals_plain(spark):
     """Both rank tiers must produce identical islands — forcing the
     two-phase route on a small key set pins the equality (the tx22
@@ -2473,25 +2449,6 @@ def test_id_islands_two_phase_tier_equals_plain(spark):
               id_islands(keys, "id", two_phase_min_keys=1).collect()]
     assert plain == forced == [(1, 3, 3), (10, 16, 7), (30, 30, 1),
                                (45, 46, 2)]
-
-
-def test_ranges_from_islands_refuses_gap_dominated_tables(spark):
-    """Round-9 review: island cardinality is O(keys) on adversarially
-    sparse tables (every other id missing), so the driver transfer is
-    gated and refuses its cliff with a pointer to histogram-probe
-    chunking."""
-    import pytest as _pytest
-
-    from dbix_batchchunker_spark.operators.advanced import (
-        ranges_from_islands,
-    )
-
-    odd = spark.range(0, 40).select((F.col("id") * 2 + 1).alias("id"))
-    with _pytest.raises(ValueError, match="gap-dominated"):
-        ranges_from_islands(odd, "id", chunk_size=5, max_islands=10)
-    # under the gate the same table works (20 singleton islands)
-    got = ranges_from_islands(odd, "id", chunk_size=5, max_islands=100)
-    assert got == [(2 * i + 1, 2 * i + 1) for i in range(40)]
 
 
 def test_tx33_tx34_degenerate_docs_match_oracle(spark, tmp_path):
