@@ -379,7 +379,7 @@ class BatchChunker:
                         break
 
                     if not self._process_past_max_checker():
-                        continue
+                        break  # the max is gone: nothing left to process
                     if self._probe_and_check():
                         fut = pool.submit(
                             self._dispatch, ls.start, ls.end, None if inline else notes.append

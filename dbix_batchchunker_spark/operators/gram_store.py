@@ -29,6 +29,11 @@ partition ``batch=k`` holds the grams batch ``k``'s kept docs claimed, so
   ``batch = -1`` (always < any real batch id), bounding file count
   (verdict #3).
 
+Storage format: every file the store, its tombstones, compact staging and
+the onboarding sinks write is zstd parquet (``store_fs.STORE_PARQUET_OPTIONS``);
+the table declares it, and dynamic partition overwrite, in its own OPTIONS,
+so no write touches a session conf.
+
 Cost honesty at 100 TB: with no index, any probe still SCANS the store
 once per batch (single column, dictionary-encoded parquet, gram-sorted
 files ⇒ row-group pruning headroom); what bucketing removes is the
@@ -84,9 +89,13 @@ from .text import (
 COMPACT_PARTITION = -1
 
 #: Broadcast ceiling for the tombstone anti-join, in bytes of tombstone
-#: parquet on disk (~8 B/doc_id raw; 32 MiB ≈ several million purged docs,
-#: an order of magnitude past any between-compaction backlog the ingest
-#: discipline plans for, yet far below what would pressure the driver).
+#: parquet on disk. A doc_id is 8 B raw; on disk, zstd pages (purge's
+#: format) measured 1.45 B/doc_id for 1M distinct stride-7 ids, against
+#: 4.24 B with snappy (local[4]; dense ids 1.04 vs 4.01 B, random 40-bit
+#: ids 6.0 vs 7.4 B). 11 MiB ≈ 8M purged docs — the row ceiling the
+#: snappy-era 32 MiB gave — an order of magnitude past any
+#: between-compaction backlog the ingest discipline plans for, yet far
+#: below what would pressure the driver.
 #: Below the ceiling the anti-join BROADCASTS (preserves the bucketed
 #: scan's partitioning — the flat-probe plan). At or above — a mass
 #: takedown between maintenance windows — it falls back to a SHUFFLE_HASH
@@ -96,7 +105,7 @@ COMPACT_PARTITION = -1
 #: that safety valves are code, not docstrings — BatchChunker.pm:1549-1553
 #: caps its count probes the same way). ``needs_compact()`` fires at the
 #: same threshold so the loop can schedule the compact that clears it.
-TOMBSTONE_BROADCAST_MAX_BYTES = 32 << 20
+TOMBSTONE_BROADCAST_MAX_BYTES = 11 << 20
 
 class GramPostingsStore:
     """Lifecycle owner of one postings table. ``name`` is the catalog
@@ -129,9 +138,22 @@ class GramPostingsStore:
 
     # -- creation / registration ------------------------------------------
 
+    #: The table's OPTIONS carry the write format: ``insertInto`` ignores
+    #: DataFrameWriter options (an ``.option("compression", ...)`` still
+    #: writes the session codec, an ``.option("partitionOverwriteMode",
+    #: ...)`` still wipes other partitions), while table OPTIONS are
+    #: honoured and survive a drop + ``register()``.
     _DDL = (
         "CREATE TABLE {name} (gram STRING, doc_id BIGINT, batch BIGINT) "
-        "USING PARQUET PARTITIONED BY (batch) "
+        "USING PARQUET OPTIONS ("
+        + ", ".join(
+            f"'{k}'='{v}'"
+            for k, v in {
+                **store_fs.STORE_PARQUET_OPTIONS,
+                "partitionOverwriteMode": "dynamic",
+            }.items()
+        )
+        + ") PARTITIONED BY (batch) "
         "CLUSTERED BY (gram) SORTED BY (gram) INTO {nb} BUCKETS "
         "LOCATION '{path}'"
     )
@@ -464,31 +486,18 @@ class GramPostingsStore:
         gram with the bucket count (repartition's Murmur3 == the bucket
         hash) so each task owns exactly one bucket — one file per bucket
         per partition, not one per (task × bucket). Column order is
-        positional for insertInto: (gram, doc_id, batch). The write runs
+        positional for insertInto: (gram, doc_id, batch). The overwrite
+        is dynamic by the table's OPTIONS (``_DDL``). The write runs
         inside a ``_writing`` marker so a compact() landing mid-write
         refuses instead of folding-then-dropping the in-flight rows."""
-        conf = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(conf, None)
-        self.spark.conf.set(conf, "dynamic")
-        try:
-            with self._writing("insert"):
-                (
-                    postings.select("gram", "doc_id", "batch")
-                    .repartition(self.n_buckets, F.col("gram"))
-                    .sortWithinPartitions("gram")
-                    .write.mode("overwrite")
-                    .insertInto(self.name)
-                )
-        finally:
-            # restore-or-UNSET: conf.get(conf, None) returns None when the
-            # conf was never set (sources/parquet.py reads the 'static'
-            # default instead) — skipping the restore would leak dynamic
-            # overwrite mode session-wide from the first store write on
-            # (round-14 advisor)
-            if prev is not None:
-                self.spark.conf.set(conf, prev)
-            else:
-                self.spark.conf.unset(conf)
+        with self._writing("insert"):
+            (
+                postings.select("gram", "doc_id", "batch")
+                .repartition(self.n_buckets, F.col("gram"))
+                .sortWithinPartitions("gram")
+                .write.mode("overwrite")
+                .insertInto(self.name)
+            )
 
     def add_postings(self, kept_docs: DataFrame, bid: int, n: int = _SSD_N) -> None:
         """Claim a batch's grams: (doc_id, text) → distinct (gram, doc_id)
@@ -519,7 +528,9 @@ class GramPostingsStore:
             F.col(doc_ids.columns[0]).cast("long").alias("doc_id")
         ).distinct()
         with self._writing("purge"):
-            d.write.mode("append").parquet(self.tombstone_path)
+            d.write.mode("append").options(
+                **store_fs.STORE_PARQUET_OPTIONS
+            ).parquet(self.tombstone_path)
 
     def compact(self, force: bool = False) -> None:
         """Fold the live postings into the base partition ``batch=-1``,
@@ -555,7 +566,9 @@ class GramPostingsStore:
         # stage DURABLY before touching the table: the staged parquet (not
         # executor-local storage) is what makes the fold re-runnable after
         # a crash mid-swap
-        base.write.mode("overwrite").parquet(self.staging_path)
+        base.write.mode("overwrite").options(
+            **store_fs.STORE_PARQUET_OPTIONS
+        ).parquet(self.staging_path)
         self._insert(self.spark.read.parquet(self.staging_path))
         # handshake re-check before anything is DROPPED: a writer whose
         # lease check passed just before the lease landed has a live
@@ -943,9 +956,9 @@ def _sink_chunk(result: DataFrame, sink_dir: str, bid: int) -> None:
     executor storage stays one-chunk-bounded instead of accumulating a
     block set per chunk (the same storage-leak class the round-15
     advisor flagged in the fixpoint loop)."""
-    result.write.mode("overwrite").parquet(
-        os.path.join(sink_dir, f"b{bid}")
-    )
+    result.write.mode("overwrite").options(
+        **store_fs.STORE_PARQUET_OPTIONS
+    ).parquet(os.path.join(sink_dir, f"b{bid}"))
     _free_local_checkpoint(result)
 
 
@@ -1232,30 +1245,8 @@ def onboard_corpus_wave(
     base_bid = store.max_real_batch()
     # run-level marker across phase 1 + reconcile + publish: a compact()
     # cannot land between chunk writes or mid-publish, and a CRASHED wave
-    # keeps blocking it until the documented repair (see run_guard).
-    # Entered BEFORE the conf set: a refusal here (maintenance in flight)
-    # must not leak dynamic overwrite mode session-wide.
-    _run_guard = store.run_guard("onboard_wave")
-    _run_guard.__enter__()  # exited in the finally below
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        prev = spark.conf.get(conf, None)
-        # set ONCE for the whole wave: _insert's per-call set/restore is
-        # not atomic across max_in_flight workers (T2's set can race T1's
-        # restore)
-        spark.conf.set(conf, "dynamic")
-    except BaseException:
-        # failed before any work: nothing committed, so release the run
-        # marker (run_guard's refused-to-start path) instead of demanding
-        # a manual break_lease for a run that never started
-        _run_guard.__exit__(None, None, None)
-        raise
-    # Success is tracked with a LOCAL flag, not sys.exc_info(): the latter
-    # reports any exception being handled anywhere up the call stack, so a
-    # wave called from inside an except block (the repair-then-re-run
-    # idiom) would complete cleanly yet leak its run marker.
-    ok = False
-    try:
+    # keeps blocking it until the documented repair (see run_guard)
+    with store.run_guard("onboard_wave"):
 
         def ingest_chunk(bc: BatchChunker, chunk_df: DataFrame) -> None:
             # deterministic per-chunk bid from the id range (a shared
@@ -1400,7 +1391,6 @@ def onboard_corpus_wave(
             ),
         )
         if sink_dir is None:
-            ok = True
             return final
         # PUBLISH the post-reconcile rows back into this run's per-chunk
         # dirs: the sink table must read FINAL rows (the per-chunk dirs
@@ -1423,6 +1413,7 @@ def onboard_corpus_wave(
                 ).cast("long"),
             )
             .write.mode("overwrite")
+            .options(**store_fs.STORE_PARQUET_OPTIONS)
             .partitionBy("__bid")
             .parquet(staging)
         )
@@ -1461,24 +1452,9 @@ def onboard_corpus_wave(
         # the published dirs ARE the final rows — read them back rather
         # than returning the lazy join (whose phase-1 sources the renames
         # just replaced underneath)
-        out = spark.read.parquet(
+        return spark.read.parquet(
             *(os.path.join(sink_dir, f"b{b}") for b in sorted(sunk_bids))
         )
-        ok = True
-        return out
-    finally:
-        # clean-exit-only guard release: a failed run's marker STAYS so
-        # compact() keeps refusing until the documented repair (the
-        # fail-safe lifetime stated in run_guard's docstring)
-        if ok:
-            _run_guard.__exit__(None, None, None)
-        # restore-or-UNSET (round-14 advisor): prev is None when the conf
-        # was never set — leaving dynamic mode active would leak it to
-        # every later overwrite in the session
-        if prev is not None:
-            spark.conf.set(conf, prev)
-        else:
-            spark.conf.unset(conf)
 
 
 @query("tx40_concurrent_corpus_ingest", oracle=_PLANTED_INGEST_ORACLE)

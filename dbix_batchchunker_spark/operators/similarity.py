@@ -627,6 +627,7 @@ def _write_entries(
         df.repartition(F.col("centroid_id"))
         .sortWithinPartitions("centroid_id")
         .write.mode(mode)
+        .options(**store_fs.STORE_PARQUET_OPTIONS)
         .parquet(path)
     )
 
@@ -743,9 +744,13 @@ def save_ivf_index(
             "held — acquire() it (or use the context manager) first"
         )
     try:
-        index.centroids.write.mode("overwrite").parquet(f"{path}/centroids")
+        index.centroids.write.mode("overwrite").options(
+            **store_fs.STORE_PARQUET_OPTIONS
+        ).parquet(f"{path}/centroids")
         if index.supers is not None:
-            index.supers.write.mode("overwrite").parquet(f"{path}/supers")
+            index.supers.write.mode("overwrite").options(
+                **store_fs.STORE_PARQUET_OPTIONS
+            ).parquet(f"{path}/supers")
         store_fs.write_json(
             spark, f"{path}/meta.json", {"k_child": index.k_child}
         )
@@ -822,6 +827,7 @@ def save_embedding_store(
                     F.max("vec_id").alias("mx"),
                 )
                 .write.mode("overwrite")
+                .options(**store_fs.STORE_PARQUET_OPTIONS)
                 .parquet(f"{path}/vectors")
             )
 
@@ -902,9 +908,10 @@ def append_embedding_store(
         # only after BOTH halves land (the pool joins first).
         _parallel_half_writes(
             lambda: _write_entries(entries, f"{path}/entries", "append"),
-            lambda: vectors.select(
-                "vec_id", "label", "embedding", "nrm"
-            ).write.mode("append").parquet(f"{path}/vectors"),
+            lambda: vectors.select("vec_id", "label", "embedding", "nrm")
+            .write.mode("append")
+            .options(**store_fs.STORE_PARQUET_OPTIONS)
+            .parquet(f"{path}/vectors"),
         )
         if stats.mx is not None:
             store_fs.write_int(spark, f"{path}/vec_id_hwm", stats.mx)
@@ -1083,6 +1090,7 @@ def compact_persisted_embedding_store(
             ),
             lambda: v_live.observe(obs_v, F.count(F.lit(1)).alias("n"))
             .write.mode("overwrite")
+            .options(**store_fs.STORE_PARQUET_OPTIONS)
             .parquet(f"{path}/vectors__next"),
         )
         for half in ("entries", "vectors"):

@@ -15,7 +15,10 @@ the path's own FileSystem, never the driver's local disk):
 * :class:`StoreLease` over :func:`_atomic_create_if_absent` — the
   single-writer maintenance lease;
 * :func:`swap_in` / :func:`repair_half_swap` — the write-aside directory
-  swap and its crash repair.
+  swap and its crash repair;
+* :data:`STORE_PARQUET_OPTIONS` — the one parquet format every store
+  writes (the gram store's table OPTIONS, and the write options of every
+  path write of a library-owned store).
 """
 
 from __future__ import annotations
@@ -27,6 +30,14 @@ import json
 #: conditional creates enabled: PUT If-None-Match — atomic even on the
 #: object store where plain createNewFile is check-then-create).
 CONDITIONAL_CREATE_CAPABILITY = "fs.capability.conditional.create"
+
+#: Parquet write options of every persisted store. zstd entropy-codes the
+#: pages snappy only LZ-matches: a store's bytes on disk are the IO every
+#: probe pays per batch, and zstd keeps about two thirds of snappy's
+#: (random-word gram postings, dense doc_id columns). Writers of USER
+#: tables (sources/formats.py, bucketed.py, maintenance.py) keep the
+#: session's codec.
+STORE_PARQUET_OPTIONS = {"compression": "zstd"}
 
 
 def fs_for(spark, path: str):

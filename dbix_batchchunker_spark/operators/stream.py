@@ -1050,9 +1050,9 @@ def st12_stream_gram_store_ingest(
     store = os.path.join(base, "grams")
     ck = os.path.join(base, "ck")
     # seed an empty store so the first batch's semi join has a table
-    driver_rows_df(spark, [], "gram string").write.parquet(
-        os.path.join(store, "seed")
-    )
+    driver_rows_df(spark, [], "gram string").write.options(
+        **store_fs.STORE_PARQUET_OPTIONS
+    ).parquet(os.path.join(store, "seed"))
 
     def ingest(batch_df: DataFrame, bid: int) -> None:
         docs = batch_df.select("doc_id", "text")
@@ -1062,7 +1062,9 @@ def st12_stream_gram_store_ingest(
         res = incremental_substring_dedup(
             docs, gram_store, n=ST12_GRAM_N
         ).withColumn("batch", F.lit(int(bid)).cast("long"))
-        res.write.mode("overwrite").parquet(os.path.join(out, f"b{bid}"))
+        res.write.mode("overwrite").options(
+            **store_fs.STORE_PARQUET_OPTIONS
+        ).parquet(os.path.join(out, f"b{bid}"))
         # the store extension derives from the COMMITTED output (re-read,
         # not recomputed), so a replayed batch re-derives the identical
         # gram set into the same overwrite dir
@@ -1071,9 +1073,14 @@ def st12_stream_gram_store_ingest(
             .where(F.col("n_kept") > 0)
             .select("doc_id", F.col("kept_text").alias("text"))
         )
-        _positional_grams(kept, ST12_GRAM_N).select("gram").distinct().write.mode(
-            "overwrite"
-        ).parquet(os.path.join(store, f"b{bid}"))
+        (
+            _positional_grams(kept, ST12_GRAM_N)
+            .select("gram")
+            .distinct()
+            .write.mode("overwrite")
+            .options(**store_fs.STORE_PARQUET_OPTIONS)
+            .parquet(os.path.join(store, f"b{bid}"))
+        )
 
     def drain() -> None:
         feed = (
@@ -1275,7 +1282,9 @@ def st13_stream_purged_store_ingest(
         res = store.ingest_batch(docs, bid, n=ST13_GRAM_N).withColumn(
             "batch", F.lit(int(bid)).cast("long")
         )
-        res.write.mode("overwrite").parquet(os.path.join(out, f"b{bid}"))
+        res.write.mode("overwrite").options(
+            **store_fs.STORE_PARQUET_OPTIONS
+        ).parquet(os.path.join(out, f"b{bid}"))
 
     def drain() -> None:
         feed = (

@@ -15,6 +15,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.store_fs import STORE_PARQUET_OPTIONS
+
 
 def read_table(spark: SparkSession, path: str, columns: Optional[list] = None) -> DataFrame:
     df = spark.read.parquet(path)
@@ -41,19 +43,16 @@ def keyed_overwrite(
 ) -> None:
     """Write ``df`` partitioned by key bucket with dynamic partition
     overwrite: only the buckets present in ``df`` are replaced, so a chunked
-    rewrite touches exactly the ranges it processed."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("__bucket", _bucket_expr(id_name, bucket_width, min_id))
-            .write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    rewrite touches exactly the ranges it processed. The mode is this
+    write's own option, so the session conf is never touched."""
+    (
+        df.withColumn("__bucket", _bucket_expr(id_name, bucket_width, min_id))
+        .write.partitionBy("__bucket")
+        .mode("overwrite")
+        .options(**STORE_PARQUET_OPTIONS)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
 
 
 def read_keyed(spark: SparkSession, path: str) -> DataFrame:
@@ -155,6 +154,7 @@ def compensating_chunk_overwrite(
         df.withColumn("__bucket", _bucket_expr(id_name, bucket_width, min_id))
         .write.partitionBy("__bucket")
         .mode("overwrite")
+        .options(**STORE_PARQUET_OPTIONS)
         .parquet(staging)
     )
     # promote: swap each staged bucket into the live table

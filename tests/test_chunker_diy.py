@@ -132,3 +132,24 @@ def test_static_chunk_ranges_iterator():
     bc = BatchChunker(coderef=lambda *a: None, min_id=1, max_id=25,
                       chunk_size=10, target_time=0, sleep=0)
     assert list(bc.chunk_ranges()) == [(1, 10), (11, 20), (21, 25)]
+
+
+def test_process_past_max_stops_when_the_max_is_gone():
+    # the re-checked max returns None (the table was emptied): the loop
+    # stops instead of re-cutting the same range and re-querying forever
+    calls, queries = [], []
+
+    def max_fn():
+        queries.append(1)
+        if len(queries) >= 3:
+            raise AssertionError("max re-queried without end")
+        return None
+
+    bc = BatchChunker(
+        coderef=lambda bc, s, e: calls.append((s, e)),
+        min_id=1, max_id=50, chunk_size=10,
+        target_time=0, sleep=0, process_past_max=True, max_fn=max_fn,
+    )
+    bc.execute()
+    assert calls == [(1, 10), (11, 20), (21, 30), (31, 40)]
+    assert len(queries) == 1

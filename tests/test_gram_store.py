@@ -1305,10 +1305,10 @@ def test_onboarding_run_guard_blocks_compact_and_retains_on_failure(
 
 def test_wave_refusal_leaks_no_conf_or_marker(spark):
     """A wave refused at START (maintenance lease in flight) must leave
-    the session exactly as it found it: no partitionOverwriteMode leak
-    (the guard is entered BEFORE the conf set) and no retained run
-    marker (refusing to start is not a failed run — nothing committed,
-    nothing to repair)."""
+    the session exactly as it found it: no partitionOverwriteMode on the
+    session (the store's table OPTIONS declare its overwrite mode) and no
+    retained run marker (refusing to start is not a failed run — nothing
+    committed, nothing to repair)."""
     from dbix_batchchunker_spark.operators.gram_store import (
         StoreMaintenanceLockError,
         onboard_corpus_wave,
@@ -1336,6 +1336,124 @@ def test_wave_refusal_leaks_no_conf_or_marker(spark):
         if fs.exists(jp):
             fs.delete(jp, False)
         if prior is not None:
+            spark.conf.set(conf, prior)
+        cleanup_store(store)
+
+
+def _parquet_files(root: str) -> "list[str]":
+    return [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+
+
+def test_store_and_sink_files_are_zstd(spark, docs, tmp_path):
+    """Storage format: ingest, purge, compact and a wave publish write
+    every store, tombstone and sink file as zstd parquet
+    (``store_fs.STORE_PARQUET_OPTIONS``) under the session's default
+    snappy codec — and so does a compensating_chunk_overwrite table."""
+    from dbix_batchchunker_spark.operators.gram_store import onboard_corpus_wave
+    from dbix_batchchunker_spark.sources.parquet import (
+        compensating_chunk_overwrite,
+    )
+
+    assert store_fs.STORE_PARQUET_OPTIONS == {"compression": "zstd"}
+    store = temp_store(spark, "gs_zstd_", n_buckets=4)
+    try:
+        store.ingest_batch(docs.where("doc_id % 5 = 0"), bid=1, n=GRAM_N)
+        store.purge(docs.where("doc_id % 25 = 0").select("doc_id"))
+        store.compact()
+        sink = str(tmp_path / "sink")
+        onboard_corpus_wave(
+            docs.where("doc_id % 5 = 1").localCheckpoint(eager=True),
+            store, target_chunks=2, n=GRAM_N, sink_dir=sink,
+        )
+        store.purge(docs.where("doc_id % 25 = 1").select("doc_id"))
+        files = {
+            "store": _parquet_files(store.path),
+            "tombstones": _parquet_files(store.tombstone_path),
+            "sink": _parquet_files(sink),
+        }
+    finally:
+        cleanup_store(store)
+    table = str(tmp_path / "committed")
+    compensating_chunk_overwrite(
+        spark.range(0, 30).select("id", (F.col("id") * 2).alias("v")),
+        table, "0-29", "id", bucket_width=10,
+    )
+    files["compensating"] = _parquet_files(table)
+    for where, fs in files.items():
+        assert fs, where
+        assert all(f.endswith(".zstd.parquet") for f in fs), (where, fs)
+
+
+def test_register_over_snappy_partition_reads_it_and_writes_zstd(
+    spark, docs
+):
+    """A store whose batch 0 was written with snappy pages (a store
+    persisted before the table declared zstd): ``register()`` reads its
+    rows back unchanged, and a new batch lands as zstd beside it."""
+    store = temp_store(spark, "gs_snap_", n_buckets=4)
+    try:
+        # batch 0 through a table without the format OPTIONS, at the
+        # session's snappy default
+        old = store.name + "_old"
+        spark.sql(
+            f"CREATE TABLE {old} (gram STRING, doc_id BIGINT, batch BIGINT) "
+            "USING PARQUET PARTITIONED BY (batch) CLUSTERED BY (gram) "
+            f"SORTED BY (gram) INTO 4 BUCKETS LOCATION '{store.path}'"
+        )
+        _positional_grams(docs.where("doc_id % 5 = 0"), GRAM_N).select(
+            "gram", "doc_id", F.lit(0).cast("long").alias("batch")
+        ).distinct().repartition(4, "gram").write.insertInto(old)
+        spark.sql(f"DROP TABLE {old}")
+        snappy = _parquet_files(os.path.join(store.path, "batch=0"))
+        assert snappy and all(f.endswith(".snappy.parquet") for f in snappy)
+
+        re_store = GramPostingsStore(
+            spark, store.name + "_re", store.path, store.n_buckets
+        ).register()
+        want = sorted(
+            spark.read.parquet(*snappy).select("gram", "doc_id").collect()
+        )  # bounded: gate-scale postings
+        got = sorted(
+            re_store.postings().select("gram", "doc_id").collect()
+        )  # bounded: same set
+        assert got == want
+        re_store.add_postings(docs.where("doc_id % 5 = 1"), bid=1, n=GRAM_N)
+        new = _parquet_files(os.path.join(store.path, "batch=1"))
+        assert new and all(f.endswith(".zstd.parquet") for f in new)
+        assert _parquet_files(os.path.join(store.path, "batch=0")) == snappy
+        re_store.drop()
+    finally:
+        cleanup_store(store)
+
+
+def test_ingest_under_static_session_mode_keeps_other_batches(spark, docs):
+    """The store's overwrite is dynamic by its table OPTIONS: with the
+    session at ``static``, ingesting batch 2 leaves batch 1 intact, and
+    the session conf is unchanged afterwards."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(conf, None)
+    store = temp_store(spark, "gs_static_", n_buckets=4)
+    try:
+        spark.conf.set(conf, "static")
+        store.add_postings(docs.where("doc_id % 5 = 0"), bid=1, n=GRAM_N)
+        b1 = sorted(
+            store.postings().where("batch = 1").collect()
+        )  # bounded: gate-scale postings
+        store.ingest_batch(docs.where("doc_id % 5 = 1"), bid=2, n=GRAM_N)
+        assert spark.conf.get(conf) == "static"
+        assert sorted(
+            store.postings().where("batch = 1").collect()
+        ) == b1  # bounded: same set
+        assert store.postings().where("batch = 2").count() > 0
+    finally:
+        if prior is None:
+            spark.conf.unset(conf)
+        else:
             spark.conf.set(conf, prior)
         cleanup_store(store)
 

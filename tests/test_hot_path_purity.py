@@ -81,3 +81,51 @@ def test_filesystem_primitives_only_in_store_fs():
         if pat in src
     ]
     assert not offenders, f"filesystem IO outside store_fs.py: {offenders}"
+
+
+def test_no_session_conf_write_of_partition_overwrite_mode():
+    """A library write declares its overwrite mode itself (table OPTIONS
+    or a write option): no package module sets or unsets
+    ``partitionOverwriteMode`` on the session, which would race across
+    concurrent writers and leak into the caller's later writes."""
+    offenders = []
+    for p, src in _sources():
+        # the key as a literal, or through a name bound to it
+        # (``conf = "spark.sql.sources.partitionOverwriteMode"``)
+        names = set(re.findall(r"(\w+)\s*=\s*[\"'][^\"']*partitionOverwriteMode", src))
+        for m in re.finditer(r"conf\.(?:set|unset)\(\s*([^,)]*)", src):
+            key = m.group(1).strip()
+            if "partitionOverwriteMode" in key or key in names:
+                offenders.append(f"{p.relative_to(PKG)}:{src[: m.start()].count(chr(10)) + 1}")
+    assert not offenders, f"session conf write of the overwrite mode: {offenders}"
+
+
+#: Modules whose parquet writes persist a library-owned store.
+STORE_MODULES = (
+    "operators/gram_store.py",
+    "operators/similarity.py",
+    "operators/stream.py",
+    "sources/parquet.py",
+)
+
+
+def test_store_writes_declare_the_store_format():
+    """Every parquet write of a store module carries
+    ``store_fs.STORE_PARQUET_OPTIONS``: a path write passes it as write
+    options, and the gram store's ``insertInto`` gets it from the table
+    DDL (``_DDL``), since insertInto ignores writer options."""
+    offenders = []
+    for rel in STORE_MODULES:
+        src = (PKG / rel).read_text()
+        for m in re.finditer(
+            r"\.write\.((?:(?!\.write\.).)*?)\.(parquet|insertInto)\(", src, re.S
+        ):
+            line = src[: m.start()].count("\n") + 1
+            if m.group(2) == "insertInto":
+                ddl = re.search(r"_DDL = \((.*?)\n    \)", src, re.S)
+                ok = ddl is not None and "STORE_PARQUET_OPTIONS" in ddl.group(1)
+            else:
+                ok = "STORE_PARQUET_OPTIONS" in m.group(1)
+            if not ok:
+                offenders.append(f"{rel}:{line}")
+    assert not offenders, f"store write without the store format: {offenders}"
